@@ -1025,8 +1025,9 @@ object VersionedTable {
     * O(all partitions) recursive listing to build the file index
     * before pruning — measured at x10 of sf0.1 (782 shard dirs):
     * 1.45 s of a 1.7 s single-shard read was the listing, 0.08 s the
-    * data (tools/ResumeProf) — a fixed per-query cost that grows with
-    * the TABLE (at 100 TB: millions of directories), not the read.
+    * data (BASELINE.md "Shard-resume proportionality") — a fixed
+    * per-query cost that grows with the TABLE (at 100 TB: millions of
+    * directories), not the read.
     * This face does ONE non-recursive readdir of the snapshot root
     * (metadata-sized: names only), filters the names, and recursively
     * lists only the survivors — the manifest-style pruned planning a

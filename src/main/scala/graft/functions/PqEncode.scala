@@ -16,11 +16,19 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
   * `s + Math.pow(diff, 2)` in ascending t exactly as the HOF's
   * aggregate does, and the argmin uses the HOF's strict `<` against
   * the running best (initial best d = +Infinity, c = −1), so the codes
-  * are bitwise-identical on every input the HOF accepts (PqEncodeSpec
-  * pins it, the UnitNormSpec contract). A null element inside
-  * subspace j nulls the HOF's distance for every candidate, leaving
-  * that subspace's aggregate at its -1 seed — mirrored here by
-  * emitting -1 without scoring.
+  * are bitwise-identical on every non-NULL vector of at least m·sub
+  * elements (PqEncodeSpec pins it, the UnitNormSpec contract). A null
+  * element inside subspace j nulls the HOF's distance for every
+  * candidate, leaving that subspace's aggregate at its -1 seed —
+  * mirrored here by emitting -1 without scoring.
+  *
+  * Outside that domain the two differ (PqEncodeSpec pins both):
+  *  - a NULL vector encodes to NULL here, to m codes of -1 in the HOF;
+  *  - a vector shorter than m·sub throws here; the HOF throws too
+  *    under ANSI (the session default), but with ANSI off it reads
+  *    NULL past the end and returns -1 for the uncovered subspaces.
+  * Both call sites (AnnIndex.encode, Llm.pqCodes) encode the UnitNorm
+  * of the embedding column at the dimension the codebook was fit on.
   *
   * What changes is cost: the HOF form is CodegenFallback and
   * allocates a ks-length struct array plus a sub-length sequence per
@@ -49,8 +57,9 @@ case class PqEncode(child: Expression,
   override def prettyName: String = "graft_pq_encode"
 
   def compute(v: ArrayData): ArrayData = {
-    // the HOF's element_at would throw (ANSI) on a short vector —
-    // fail just as loudly rather than encode garbage
+    // the HOF's element_at throws on a short vector under ANSI (the
+    // session default) — fail just as loudly, whatever the setting,
+    // rather than encode garbage
     if (v.numElements() < m * sub)
       throw new IllegalArgumentException(
         s"$prettyName: vector of ${v.numElements()} dims cannot serve " +

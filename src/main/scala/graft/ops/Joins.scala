@@ -1101,8 +1101,9 @@ object Joins {
     // (round-14): its ranking window's exchange is identical on both
     // sides, so AQE stage reuse computes the explode + df join +
     // window chain once at runtime — the former eager localCheckpoint
-    // parked a corpus-sized block in executor storage (the MinhashProbe
-    // x1000 OOM shape) for no measured win (x1 and x10 walls flat)
+    // parked a corpus-sized block in executor storage (the minhash
+    // x1000 OOM shape, BASELINE.md "Round-12 deep-scale probe") for no
+    // measured win (x1 and x10 walls flat)
     val prefix = prebuilt.map(_.df)
       .getOrElse(editDistPrefixTableDf(names, k, q))
       .filter(col("rk") <= pref)

@@ -170,108 +170,37 @@ object Llm {
   private val substrN = 6
   private val substrMinRun = 10
 
-  /** Materialization strategy for the substring ops' gram frame — the
-    * round-13 head-to-head knob (the MinhashProbe pattern applied to
-    * the family's own deep-scale wall: islands build x30→x100 step of
-    * 5.6 for 3.3x data = spill onset, BASELINE.md round-12 cells).
-    * Values (tools/IslandsProbe measures all of them):
-    *  - "checkpoint"    — round-12 status quo: hex md5 digests, full
-    *    positional gram frame eagerly localCheckpointed;
-    *  - "checkpoint-bin" — same shape, 16-byte binary digests
-    *    (unhex(md5)) so the materialized frame and every gram shuffle
-    *    carry half the key bytes;
-    *  - "thinrare-bin"  — binary digests; only the df-capped RARE
-    *    digest set (one 16-byte row per distinct gram, no doc/pos) is
-    *    materialized, the positional frame recomputes per self-join
-    *    side with the join pinned sort-merge so the shared shuffle
-    *    reuses;
-    *  - "recompute-bin" — binary digests, nothing materialized
-    *    (zero storage-pool pressure, the minhash x1000 fix's shape);
-    *  - "repart-bin"    — binary digests, the positional gram frame
-    *    hash-repartitioned by `g` ONCE: all three gram consumers (df
-    *    aggregate + both self-join sides) require exactly that
-    *    distribution, so they share the single exchange via
-    *    ReuseExchange and the explode+md5 derivation runs once per
-    *    build instead of once per consumer — shuffle files, not
-    *    storage blocks, so none of the checkpoint arms' spill-onset
-    *    pressure (guide §2.4 "two operations keyed the same way can
-    *    share one exchange");
-    *  - "spread-repart-bin" — repart-bin plus a round-robin spread of
-    *    the tokenized docs ahead of the explode, so the one remaining
-    *    derivation runs at cluster parallelism instead of the
-    *    fixture's single-row-group task count (guide §2.5 input skew).
-    * Digest form is oracle-safe: g never leaves the query — equality
-    * of md5 hex strings and of their unhex bytes is the same
-    * predicate.
-    *
-    * Round-13 IslandsProbe verdict (x100 = 500k docs, 32 cores, 8 GB):
-    * checkpoint 112.3 s / 27.3 GB spill; checkpoint-bin 35.5 s /
-    * 22.7 GB; thinrare-bin 26.9 s / 7.6 GB; recompute-bin 20.9 s /
-    * 8.1 GB — the corpus-positional materialization WAS the spill
-    * onset, exactly the minhash x1000 mechanism.
-    *
-    * Round-15 IslandsProbe verdict (same harness, one session, arms
-    * interleaved per factor; recompute / repart / spread-repart):
-    * x1 raw fixture (3 rounds, min) 1.9 / 1.5 / 1.7 s; x30
-    * 40.6 / 16.2 / 17.1 s (shuffleW 512 / 361 / 494 MB); x100
-    * 46.3 / 34.2 / 31.0 s (shuffleW 1709 / 1205 / 1672 MB, spill
-    * 8.1 GB all arms) — sharing the one g-exchange wins at every
-    * depth AND shuffles fewer total bytes (one full-frame exchange
-    * replaces the agg's and the semi-join's separate ones). The
-    * pre-explode spread arm only edges ahead at x100 (31.0 vs 34.2)
-    * and pays a full round-robin shuffle of the tokenized corpus
-    * text for it — at real input-split counts the derive map is
-    * already parallel, so the spread is pure overhead there; not
-    * taken as default. */
-  @volatile private[graft] var substrGramStrategy: String = "repart-bin"
-
   /** Shared core of the substring ops: positional n-gram digests,
     * df-capped gram-digest equi-join (never doc x doc),
-    * constant-alignment islands — see substrDedup's scaladoc. */
+    * constant-alignment islands — see substrDedup's scaladoc.
+    *
+    * The positional gram frame is hash-repartitioned by `g` once. All
+    * three gram consumers (df aggregate and both self-join sides)
+    * require exactly that distribution, so they share the single
+    * exchange via ReuseExchange and the explode+md5 derivation runs
+    * once per build instead of once per consumer. It is shuffle
+    * files, not storage blocks, so there is no storage-pool pressure:
+    * materializing the corpus-positional frame was the spill onset
+    * (BASELINE.md "Round-13 substring islands strategy head-to-head"
+    * and "Round-14 substring islands at x1000"), and the shared
+    * exchange beat recomputing per consumer at x1/x30/x100 with ~25%
+    * fewer shuffle bytes (OPTIMIZATION_r15.md §1). Digests are the
+    * 16-byte unhex(md5) form; g never leaves the query, so equality
+    * of the binary digests is the same predicate as of their hex. */
   private def matchedIslands(spark: SparkSession, dir: String, n: Int)
       : DataFrame = {
-    val strategy = substrGramStrategy
     val slices = (0 until n)
       .map(i => s"slice(t, ${i + 1}, greatest(size(t) - ${n - 1}, 0))")
       .mkString(",\n             ")
     val fields = (0 until n).map(i => s"p['$i']").mkString(", ")
-    val digest =
-      if (strategy == "checkpoint") s"md5(concat_ws(' ', $fields))"
-      else s"unhex(md5(concat_ws(' ', $fields)))"
-    // spread arms: round-robin the tokenized docs ahead of the explode
-    // so the (single, see below) gram derivation runs at cluster
-    // parallelism, not the fixture's row-group task count (§2.5) —
-    // sized by defaultParallelism, never a local constant
-    val tokens0 = tokenized(spark, dir)
-    val tokens =
-      if (strategy.startsWith("spread"))
-        tokens0.repartition(spark.sparkContext.defaultParallelism)
-      else tokens0
-    val allGramsLazy = tokens
+    val digest = s"unhex(md5(concat_ws(' ', $fields)))"
+    val allGrams = tokenized(spark, dir)
       .filter(size(col("t")) >= n)
       .select(col("doc_id"), posexplode(expr(
         s"""transform(
            arrays_zip($slices),
            p -> $digest)""")).as(Seq("pos", "g")))
-    // FOUR consumers (df aggregate + semi-join left, each on both
-    // self-join sides): the checkpoint strategies pay the gram
-    // derivation once into MEMORY_AND_DISK blocks (without
-    // materialization the planner rebuilt the explode+md5 subtree per
-    // consumer at sf0.1 once AQE picked BHJ — no ReusedExchange);
-    // the recompute strategies trade re-derivation (map-only CPU)
-    // for ZERO storage-pool pressure — the corpus-sized-block lesson
-    // the minhash x1000 OOM taught (commit 636ac6a). Blocks are freed
-    // by the ContextCleaner with the build's result frame (at cluster
-    // scale, substitute reliable checkpoint() — this is the one-off
-    // memo BUILD, not a per-query cost).
-    // repart arms: hash-repartition the positional frame by g — the
-    // distribution every consumer requires — so ReuseExchange serves
-    // all three from ONE exchange and the derivation above runs once
-    // per build (shuffle files, zero storage-pool pressure)
-    val allGrams =
-      if (strategy.startsWith("checkpoint")) allGramsLazy.localCheckpoint(true)
-      else if (strategy.contains("repart")) allGramsLazy.repartition(col("g"))
-      else allGramsLazy
+      .repartition(col("g"))
     // df cap: one gram-keyed aggregate + semi join — rides the same
     // gram-hash shuffle the self-join needs anyway. The rare set is
     // GRAM-CARDINALITY-sized (most grams are rare — that's the point
@@ -281,28 +210,18 @@ object Llm {
     // probe (SpillProbe, 2 GB) died building exactly that hashed
     // relation. The merge hint pins a sort-merge semi join: fully
     // spillable, and the gram shuffle exists anyway.
-    val rareLazy = allGrams.groupBy(col("g"))
+    val rare = allGrams.groupBy(col("g"))
       .agg(countDistinct(col("doc_id")).as("df"))
       .filter(col("df") <= gramDfCap)
       .select(col("g"))
-    // thinrare: the one materialization that is NOT corpus-positional
-    // — one 16-byte digest per distinct rare gram, no (doc, pos)
-    val rare =
-      if (strategy.startsWith("thinrare")) rareLazy.localCheckpoint(true)
-      else rareLazy
     val grams = allGrams.join(rare.hint("merge"), Seq("g"), "left_semi")
     val a = grams.as("a")
     val b = grams.as("b")
-    // non-checkpoint strategies pin the self-join sort-merge: with a
-    // lazy gram frame, an AQE broadcast pick would BUILD a
-    // corpus-scale hashed relation (the round-6 death) and break the
-    // both-sides-identical exchange reuse the recompute price depends
-    // on; the checkpoint strategies keep AQE's runtime choice (the
-    // round-12 plan, BHJ at small SF where it is genuinely faster)
-    val bSide =
-      if (strategy.startsWith("checkpoint")) b
-      else b.hint("merge")
-    val matched = a.join(bSide,
+    // the self-join is pinned sort-merge: with a lazy gram frame, an
+    // AQE broadcast pick would BUILD a corpus-scale hashed relation
+    // (the round-6 death) and break the both-sides-identical exchange
+    // reuse the shared g-exchange depends on
+    val matched = a.join(b.hint("merge"),
         col("a.g") === col("b.g") && col("a.doc_id") < col("b.doc_id"))
       .select(
         col("a.doc_id").as("d1"), col("b.doc_id").as("d2"),
@@ -429,15 +348,6 @@ object Llm {
       .orderBy(col("d1"), col("d2"))
   }
 
-  /** Native MinHash LSH, pure expressions end to end:
-    * 12 min-hashes (xxhash64 seeded by position prefix) -> 6 bands of
-    * 2 -> band-bucket candidate join -> EXACT jaccard verification via
-    * array_intersect. Because candidates are exactly verified, the
-    * output equals the exhaustive `dedupNgram` whenever LSH recall
-    * holds (planted dups sit at jaccard ~0.97: per-band match 0.94^1,
-    * miss across 6 bands ~2e-8) — so it shares the exact oracle.
-    * No MLlib UDF pair scoring; one shuffle on band keys, one on
-    * candidate pairs. */
   /** (doc_id, band_idx, band_key) banded MinHash signatures from a
     * (doc_id, shingles) frame — 12 min-hashes in 6 bands of 2.
     * Signatures are a hash AGGREGATE over exploded shingles, not a
@@ -447,10 +357,7 @@ object Llm {
     * slower than the exhaustive join it was meant to beat. Shared by
     * dedupMinhashNative (self-join) and dedupIncremental (snapshot
     * build + new-batch probe), so both populations band identically. */
-  private[graft] def bandedSignatures(docs: DataFrame): DataFrame =
-    bandedSignaturesGrouped(docs)
-
-  private[graft] def bandedSignaturesGrouped(docs: DataFrame): DataFrame = {
+  private[graft] def bandedSignatures(docs: DataFrame): DataFrame = {
     val sh = docs.select(col("doc_id"), explode(col("shingles")).as("s"))
     val sigs = sh.groupBy(col("doc_id")).agg(
       min(xxhash64(lit(0), col("s"))).as("h0"),
@@ -469,11 +376,6 @@ object Llm {
     docs.withColumn("t", expr(toksE))
       .select(col("doc_id"), expr(shinglesE).as("shingles"))
       .filter(size(col("shingles")) > 0)
-
-  /** [[shingleDocs]] over the catalog's documents table — the probe
-    * harnesses' entry point. */
-  private[graft] def shingleDocsAt(spark: SparkSession, dir: String): DataFrame =
-    shingleDocs(Tables(spark, dir, "documents"))
 
   /** MAP-ONLY equivalent of [[bandedSignatures]]: each per-seed
     * minimum is `array_min(transform(...))` over the row's own
@@ -497,46 +399,29 @@ object Llm {
         .as(Seq("band_idx", "band_key")))
   }
 
-  val dedupMinhashNative: Q = (spark, dir) =>
-    minhashNativePairs(spark, dir, materialize = false)
-
-  /** A/B knob for the candidate-pruned verify (round-15 "not yet"
-    * #2, tried and CONVICTED): `true` semi-joins the raw documents
-    * against the candidate ids before the verify-side shingle
-    * derivation — which kills the third shingle derivation but LOSES
-    * the head-to-head at every depth (tools/MinhashVerifyProbe,
-    * interleaved arms, one session: x1 pruned 1.66-2.30 s vs full
-    * 1.10-1.26 s; x30 pruned 7.2-10.0 s vs full 6.3-6.9 s, shuffleW
-    * 106 vs 53 MB, tasks 189 vs 106): the semi join materializes as
-    * an extra doc_id shuffle + two more barrier stages, and the
-    * map-only shingle derivation it saves is cheaper than that at
-    * every measured factor (the same verdict MinhashProbe reached on
-    * materializing it). `false` = the round-14 three-derivation
-    * shape, kept as default on the measurement. */
-  @volatile private[graft] var minhashPrunedVerify: Boolean = false
-
-  /** [[dedupMinhashNative]]'s body with the shingle-frame
-    * materialization strategy exposed: `materialize = true`
-    * localCheckpoints the (doc_id, shingles) frame once for its three
-    * consumers; `false` (production) recomputes the map-only shingle
-    * derivation per consumer. Round-12 MinhashProbe measured the
-    * checkpoint variant LOSING at every deep factor — x300: 46.8 s
-    * with 4.4 GB spill vs 37.4 s spill-free; x1000 (5M docs, 8 GB
-    * heap): AGGREGATE_OUT_OF_MEMORY vs completing in 236.6 s — the
-    * corpus-sized MEMORY_AND_DISK blocks compete with the signature
-    * aggregate's execution memory in the unified pool, which is
-    * exactly the regime a 100 TB corpus forces. Recomputing a
-    * map-only derivation is the scale-correct trade; the banded
-    * self-join's two identical sides still share one exchange
-    * (ReusedExchange). */
-  private[graft] def minhashNativePairs(spark: SparkSession, dir: String,
-      materialize: Boolean): DataFrame = {
-    // three consumers (signature explode, both verify joins) — derive
-    // the shingle arrays once
-    val docsRaw = shingleDocs(Tables(spark, dir, "documents"))
-    val docs =
-      // eager localCheckpoint, not persist (the mmPhash leak rule)
-      if (materialize) docsRaw.localCheckpoint(true) else docsRaw
+  /** Native MinHash LSH, pure expressions end to end:
+    * 12 min-hashes (xxhash64 seeded by position prefix) -> 6 bands of
+    * 2 -> band-bucket candidate join -> EXACT jaccard verification via
+    * array_intersect. Because candidates are exactly verified, the
+    * output equals the exhaustive `dedupNgram` whenever LSH recall
+    * holds (planted dups sit at jaccard ~0.97: per-band match 0.94^1,
+    * miss across 6 bands ~2e-8) — so it shares the exact oracle.
+    * No MLlib UDF pair scoring; one shuffle on band keys, one on
+    * candidate pairs.
+    *
+    * The (doc_id, shingles) frame feeds three consumers (signature
+    * explode, both verify joins) and is NOT materialized: recomputing
+    * the map-only derivation per consumer beats holding corpus-sized
+    * MEMORY_AND_DISK blocks, which compete with the signature
+    * aggregate's execution memory (checkpointing it spilled 4.4 GB at
+    * x300 and hit AGGREGATE_OUT_OF_MEMORY at x1000 — BASELINE.md
+    * "Round-12 deep-scale probe"). Semi-joining
+    * the verify sides against the candidate ids loses too: its extra
+    * doc_id shuffle costs more than the derivation it saves
+    * (OPTIMIZATION_r15.md §5). The banded self-join's two identical
+    * sides share one exchange (ReusedExchange). */
+  val dedupMinhashNative: Q = (spark, dir) => {
+    val docs = shingleDocs(Tables(spark, dir, "documents"))
     val banded = bandedSignatures(docs)
     val a = banded.as("a")
     val b = banded.as("b")
@@ -547,20 +432,8 @@ object Llm {
           col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
       .distinct()
-    // candidate-pruned verify arm (round-15, see minhashPrunedVerify:
-    // measured LOSING at every depth and therefore OFF by default —
-    // the semi join's extra doc_id shuffle costs more than the
-    // map-only derivation it saves). Exact either way: the semi join
-    // only drops rows the equi-join below would drop anyway.
-    def prunedShingles(ids: DataFrame): DataFrame =
-      if (!minhashPrunedVerify) docs
-      else if (materialize) docs.join(ids, Seq("doc_id"), "left_semi")
-      else shingleDocs(Tables(spark, dir, "documents")
-        .join(ids, Seq("doc_id"), "left_semi"))
-    val sa = prunedShingles(cands.select(col("d1").as("doc_id")))
-      .select(col("doc_id").as("d1"), col("shingles").as("sa"))
-    val sb = prunedShingles(cands.select(col("d2").as("doc_id")))
-      .select(col("doc_id").as("d2"), col("shingles").as("sb"))
+    val sa = docs.select(col("doc_id").as("d1"), col("shingles").as("sa"))
+    val sb = docs.select(col("doc_id").as("d2"), col("shingles").as("sb"))
     cands
       .join(sa, Seq("d1"))
       .join(sb, Seq("d2"))
@@ -713,9 +586,10 @@ object Llm {
     // two consumers of the new batch's shingles (signing + verify):
     // NOT materialized — the derivation is map-only, and checkpointed
     // shingle arrays' storage blocks compete with the signature
-    // aggregate's execution memory (the round-12 MinhashProbe x1000
-    // wall on the self-join path; the batch here is corpus/5, which
-    // only defers the same wall one factor of 5)
+    // aggregate's execution memory (the round-12 x1000 wall on the
+    // self-join path, BASELINE.md "Round-12 deep-scale probe"; the
+    // batch here is corpus/5, which only defers the same wall one
+    // factor of 5)
     val newDocs = shingleDocs(batchDocs)
     val newBandsRaw = bandedSignatures(newDocs)
     // count the batch DOCS (column-pruned to doc_id, a metadata-cheap
@@ -3179,8 +3053,9 @@ object Llm {
     // Pruned LISTING, not just a pruned scan: the plain read + filter
     // still builds a file index over EVERY shard directory before
     // partition pruning runs — a fixed cost that grows with the table
-    // (tools/ResumeProf: 1.45 s of a 1.7 s x10 resume was listing,
-    // 0.08 s data), which is exactly what a resume read must not pay.
+    // (1.45 s of a 1.7 s x10 resume was listing, 0.08 s data —
+    // BASELINE.md "Shard-resume proportionality"), which is exactly
+    // what a resume read must not pay.
     // Directory names are filtered BEFORE any recursive listing, so
     // planning and scan both track the remaining fraction; the exact
     // (shard, pos) predicate below still cuts within the cursor shard.

@@ -156,7 +156,14 @@ object Windows {
     * offsets — silently wrong results. The conf defaults to true
     * everywhere; this guard turns the silent config hazard into a
     * loud failure at the call site. Every approxSplitsAgg consumer
-    * must call it. */
+    * must call it.
+    *
+    * The check reads `spark.sql.exchange.reuse` when the frame is
+    * BUILT, not when it executes: a conf flipped to false between
+    * building the frame and draining it is not caught. The current
+    * callers (Aggs.exactPercentiles, windowCume, Advanced.skyline)
+    * return a lazy frame that their callers drain right away under
+    * the same session conf, so no such window opens today. */
   private[graft] def requireSplitProbeConsistency(
       spark: org.apache.spark.sql.SparkSession): Unit =
     require(spark.conf.get("spark.sql.exchange.reuse", "true").toBoolean,

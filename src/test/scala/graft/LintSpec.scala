@@ -85,4 +85,13 @@ class LintSpec extends AnyFunSuite {
       .filter(h => scoped.exists(s => h.startsWith(s"src/main/scala/graft/$s/")))
     assert(hits.isEmpty, hits.mkString("\n"))
   }
+
+  test("no object-level var in the engine library (a session-global " +
+      "mutable knob is an arm production never selects; keep the " +
+      "winner, record the measurement)") {
+    val scoped = Seq("ops", "engine", "streaming", "functions", "util")
+    val hits = offenders("""^  (@volatile )?(private(\[\w+\])? )?var """)
+      .filter(h => scoped.exists(s => h.startsWith(s"src/main/scala/graft/$s/")))
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
 }

@@ -70,4 +70,52 @@ class PqEncodeSpec extends SparkTestBase {
     assert(h.head == -1, s"HOF premise changed: $h")
     assert(h == n, s"HOF $h vs native $n")
   }
+
+  /** Every message along an exception's cause chain, for asserting on
+    * failures that may arrive wrapped in a SparkException. */
+  private def messages(t: Throwable): String =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+      .map(e => s"${e.getClass.getName}: ${e.getMessage}").mkString(" | ")
+
+  test("NULL unit array: the native encoder returns NULL, the HOF " +
+      "returns m codes of -1 (outside the domain the two agree on)") {
+    val m = 2; val ks = 2; val sub = 2
+    val cb = Array(0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8)
+    val df = Seq((0L, Option.empty[Seq[Double]])).toDF("vec_id", "unit")
+    val r = hofCodes(df, cb, m, ks, sub)
+      .withColumn("native", PqEncode(spark, col("unit"), cb, m, ks, sub))
+      .select("hof", "native").head()
+    assert(r.getSeq[Int](0) == Seq(-1, -1), s"HOF: ${r.get(0)}")
+    assert(r.isNullAt(1), s"native: ${r.get(1)}")
+  }
+
+  test("vector shorter than m*sub: both encoders throw under ANSI " +
+      "(the session default); with ANSI off only the native one does") {
+    val m = 2; val ks = 2; val sub = 2
+    val cb = Array(0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8)
+    def codes(s: org.apache.spark.sql.SparkSession, which: String) = {
+      import s.implicits._
+      val df = Seq((0L, Seq(0.1, 0.2, 0.3))).toDF("vec_id", "unit")
+        .withColumn("cb", typedLit(cb.toSeq))
+      val c =
+        if (which == "hof") expr(graft.ops.Llm.pqEncodeExpr(m, ks, sub))
+        else PqEncode(s, col("unit"), cb, m, ks, sub)
+      df.select(c).head().getSeq[Int](0)
+    }
+    assert(spark.conf.get("spark.sql.ansi.enabled") == "true",
+      "premise: the session runs ANSI")
+    val hof = intercept[Exception](codes(spark, "hof"))
+    assert(messages(hof).contains("INVALID_ARRAY_INDEX_IN_ELEMENT_AT"),
+      messages(hof))
+    val native = intercept[Exception](codes(spark, "native"))
+    assert(messages(native).contains("cannot serve m=2 subspaces of 2 dims"),
+      messages(native))
+    // non-ANSI: the HOF's element_at reads NULL past the end, so the
+    // subspace it cannot cover keeps the -1 seed; native still throws
+    val lax = spark.newSession()
+    lax.conf.set("spark.sql.ansi.enabled", "false")
+    assert(codes(lax, "hof") == Seq(0, -1))
+    val laxNative = intercept[Exception](codes(lax, "native"))
+    assert(messages(laxNative).contains("cannot serve"), messages(laxNative))
+  }
 }
