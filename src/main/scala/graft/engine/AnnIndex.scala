@@ -56,13 +56,13 @@ object AnnIndex {
 
   /** The unfolded-ingest DELTA table beside the cells table — the
     * LSM shape that makes streaming refresh BATCH-bound instead of
-    * corpus-bound (round-13 IndexDeepProbe: [[refresh]]'s full-table
-    * COW merge read 7.8 s at x30 → 18.8 s at x100 for a CONSTANT
-    * 2k-vector batch; at 100 TB that is a full index rewrite per
-    * micro-batch). [[refreshDelta]] appends here in O(batch + delta),
-    * current-version reads overlay it latest-wins, and
-    * [[foldDelta]] — the nightly maintenance motion beside
-    * compactPartitioned — folds it into the cells table with ONE
+    * corpus-bound (BASELINE.md "Round-13 index/serving-family deep
+    * record": [[refresh]]'s full-table COW merge read 7.8 s at x30 →
+    * 18.8 s at x100 for a CONSTANT 2k-vector batch; at 100 TB that
+    * is a full index rewrite per micro-batch). [[refreshDelta]] appends
+    * here in O(batch + delta), current-version reads overlay it
+    * latest-wins, and [[foldDelta]] — the nightly maintenance motion
+    * beside compactPartitioned — folds it into the cells table with ONE
     * full merge per maintenance window instead of one per trigger. */
   def deltaDir(dir: String) = s"$dir/cells_delta"
 
@@ -157,9 +157,10 @@ object AnnIndex {
     // the scoring work is batch x k HOF evaluations, but the INPUT
     // partition count is whatever the batch source happened to have —
     // a small refresh batch lands as 1-2 parquet files and the whole
-    // O(batch * sqrt(n)) scoring runs in one task (round-13
-    // IndexDeepProbe: the delta-refresh row read task-spread ~2000 at
-    // x1000 with 35 tasks — a single-core hotspot on a 32-core host).
+    // O(batch * sqrt(n)) scoring runs in one task (BASELINE.md
+    // "Round-13 index/serving-family deep record": the delta-refresh
+    // row read task-spread ~2000 at x1000 with 35 tasks — a
+    // single-core hotspot on a 32-core host).
     // Spread under-parallel batches across the cores; the repartition
     // shuffles only the BATCH (tiny by contract) and the k-fold
     // scoring then runs wide. Wide batches keep their layout. The

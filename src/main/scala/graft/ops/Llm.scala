@@ -207,9 +207,10 @@ object Llm {
     // of the cap), so it must NEVER be a broadcast build: the planner
     // sees an aggregate with unknown stats and happily broadcasts
     // what is really a corpus-scale relation — the round-6 capped-heap
-    // probe (SpillProbe, 2 GB) died building exactly that hashed
-    // relation. The merge hint pins a sort-merge semi join: fully
-    // spillable, and the gram shuffle exists anyway.
+    // probe (BASELINE.md "Memory-bounded spill probe (2 GB heap, x10
+    // data)") died building exactly that hashed relation. The merge
+    // hint pins a sort-merge semi join: fully spillable, and the gram
+    // shuffle exists anyway.
     val rare = allGrams.groupBy(col("g"))
       .agg(countDistinct(col("doc_id")).as("df"))
       .filter(col("df") <= gramDfCap)
@@ -456,48 +457,30 @@ object Llm {
     * parquet table (in production: a VersionedTable in the lake that
     * each refresh appends to). Built ONCE per session; every
     * dedupIncremental call after that reads it from disk. */
-  private val snapshotSigCache = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, String]])
+  private val snapshotSigCache = graft.util.TableMemo.paths()
 
   /** Clears the memo AND deletes the written snapshot tables — same
     * contract as invalidateIslandsCache. */
-  def invalidateSnapshotSigCache(): Unit = {
-    val paths = snapshotSigCache.synchronized {
-      val ps = scala.jdk.CollectionConverters.CollectionHasAsScala(
-        snapshotSigCache.values).asScala.flatMap(_.values).toList
-      snapshotSigCache.clear()
-      ps
-    }
-    paths.foreach(graft.util.Fs.deleteRecursively)
-  }
+  def invalidateSnapshotSigCache(): Unit = snapshotSigCache.invalidate()
 
   /** Test seam: the on-disk location of the persisted snapshot (None
     * until a dedupIncremental/first call builds it). Specs use it to
     * falsify "signatures are read, not rebuilt" by doctoring the
     * table and observing the query follow the doctored bytes. */
   private[graft] def snapshotSigPath(spark: SparkSession, dir: String)
-      : Option[String] =
-    Option(snapshotSigCache.get(spark)).flatMap(_.get(dir))
+      : Option[String] = snapshotSigCache.peek(spark, dir)
 
   private def snapshotSigTable(spark: SparkSession, dir: String)
       : DataFrame = {
-    val perSession = snapshotSigCache.computeIfAbsent(spark,
-      _ => scala.collection.concurrent.TrieMap.empty[String, String])
-    // builds serialize on the per-session map: a concurrent first
-    // caller must never evaluate the builder twice — the loser's
-    // fully-written temp table would leak untracked (round-4 advice)
-    val path = perSession.synchronized {
-      perSession.getOrElseUpdate(dir, {
-        val p = graft.util.Fs.tempDir("graft_incr_sigs")
-        val old = shingleDocs(
-          Tables(spark, dir, "documents").filter(!incrBatchPred))
-        // a real VersionedTable, not a bare parquet dir: the refresh
-        // cycle appends versions (advanceIncrSnapshot) and yesterday's
-        // snapshot stays time-travelable
-        graft.engine.VersionedTable.commit(bandedSignatures(old), p)
-        p
-      })
+    val path = snapshotSigCache.getOrBuild(spark, dir) {
+      val p = graft.util.Fs.tempDir("graft_incr_sigs")
+      val old = shingleDocs(
+        Tables(spark, dir, "documents").filter(!incrBatchPred))
+      // a real VersionedTable, not a bare parquet dir: the refresh
+      // cycle appends versions (advanceIncrSnapshot) and yesterday's
+      // snapshot stays time-travelable
+      graft.engine.VersionedTable.commit(bandedSignatures(old), p)
+      p
     }
     graft.engine.VersionedTable.read(spark, path)
   }
@@ -563,12 +546,12 @@ object Llm {
     * broadcast-hash join and is NEVER shuffled — the regime that
     * matters at 100 TB, where a daily crawl batch is a fraction of a
     * percent of the corpus and a sort-merge band join would reshuffle
-    * the entire snapshot per refresh (round-13 IndexDeepProbe: the
-    * corpus/5 fixture batch at x1000 shuffled 4.9 GB, and that
-    * shuffle was ALL snapshot-side). Above the cap the sort-merge
-    * join is correct anyway: a batch that is a sizable fraction of
-    * the corpus amortizes the snapshot shuffle over proportionally
-    * many probes. */
+    * the entire snapshot per refresh (BASELINE.md "Round-13
+    * index/serving-family deep record": the corpus/5 fixture batch at
+    * x1000 shuffled 4.9 GB, and that shuffle was ALL snapshot-side).
+    * Above the cap the sort-merge join is correct anyway: a batch that
+    * is a sizable fraction of the corpus amortizes the snapshot shuffle
+    * over proportionally many probes. */
   private val incrBroadcastDocCap = 250000L
 
   /** [[dedupIncremental]] with the new batch supplied by the caller —
@@ -580,7 +563,7 @@ object Llm {
     * metadata-cheap only for column-pruned file sources (round-13
     * ADVICE: an arbitrary batch would execute its full lineage once
     * extra just to pick a join strategy). */
-  private[graft] def dedupIncrementalBatch(spark: SparkSession,
+  private def dedupIncrementalBatch(spark: SparkSession,
       dir: String, batchDocs: DataFrame,
       batchDocCount: Option[Long] = None): DataFrame = {
     // two consumers of the new batch's shingles (signing + verify):
@@ -690,24 +673,15 @@ object Llm {
 
   /** Memo: dir -> (written labels path, rounds, edge count). Values
     * are plain strings/numbers (no session reference), so the weakly
-    * held session key stays collectable — same shape as
-    * Advanced.skipTableCache, no SoftReference indirection needed. */
-  private val labelCache = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, (String, Int, Long)]])
+    * held session key stays collectable; eviction deletes the labels
+    * table. */
+  private val labelCache = new graft.util.TableMemo[(String, Int, Long)](
+    (_, v) => graft.util.Fs.deleteRecursively(v._1))
 
   /** Clears the memo AND deletes the written labels tables —
     * invalidation reclaims the disk, not just the pointer (the same
     * contract as Advanced.invalidateSkipTableCache). */
-  def invalidateClusterLabelCache(): Unit = {
-    val paths = labelCache.synchronized {
-      val ps = scala.jdk.CollectionConverters.CollectionHasAsScala(
-        labelCache.values).asScala.flatMap(_.values.map(_._1)).toList
-      labelCache.clear()
-      ps
-    }
-    paths.foreach(graft.util.Fs.deleteRecursively)
-  }
+  def invalidateClusterLabelCache(): Unit = labelCache.invalidate()
 
   /** Pair-count bound for the LOCAL connected-components path: at or
     * below it the near-dup pair list collects to the driver (16 bytes
@@ -725,12 +699,8 @@ object Llm {
     convergedLabelsBounded(spark, dir, clusterLocalPairBound)
 
   private[graft] def convergedLabelsBounded(spark: SparkSession, dir: String,
-      localBound: Long): (String, Int, Long) = {
-    val perSession = labelCache
-      .computeIfAbsent(spark, _ => scala.collection.concurrent.TrieMap.empty)
-    // serialize first-caller builds (see islandSummaryTable): a racing
-    // duplicate evaluation would leak its written labels table
-    perSession.synchronized { perSession.getOrElseUpdate(dir, {
+      localBound: Long): (String, Int, Long) =
+    labelCache.getOrBuild(spark, dir) {
     // pair source is the LSH path (exact-verified, so identical pairs
     // to the exhaustive join) — at corpus scale banding is the only
     // affordable way to produce this edge list
@@ -859,7 +829,7 @@ object Llm {
     if (prevRound != null) prevRound.unpersist()
     (path, rounds, edgeCount)
     }
-  }) } }
+  }
 
   /** Near-dup cluster REPRESENTATIVE selection — the decision step
     * that turns cluster labels into a dedup action: keep exactly one
@@ -1640,18 +1610,16 @@ object Llm {
     * seed 42) cell assignments — shared by annIvf and semDedup so a
     * session pays ONE quantizer fit per embeddings dir (the fit is the
     * expensive part; the model object survives cache clears). Session
-    * keys are held weakly; the value is behind a SoftReference because
-    * the cached DataFrame strongly references its session — a strong
-    * value would pin the weak key forever (the WeakHashMap would never
-    * evict). Under memory pressure the soft ref clears, the
-    * value→session path breaks, and a dropped session becomes
-    * collectable; `invalidateCellCache()` is the explicit override. */
-  private val cellCache = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession, scala.collection.concurrent.TrieMap[
-      String, java.lang.ref.SoftReference[
-        (graft.engine.Quantizer, DataFrame)]]])
+    * keys are held weakly; the value is softly held
+    * ([[graft.util.TableMemo.soft]]) because the cached DataFrame
+    * strongly references its session. Under memory pressure the soft
+    * ref clears, the value→session path breaks, and a dropped session
+    * becomes collectable; `invalidateCellCache()` is the explicit
+    * override. */
+  private val cellCache =
+    graft.util.TableMemo.soft[(graft.engine.Quantizer, DataFrame)]()
 
-  def invalidateCellCache(): Unit = cellCache.clear()
+  def invalidateCellCache(): Unit = cellCache.invalidate()
 
   /** Keyed memo over cellCache — shared by the dir-keyed serve path
     * and the forced-witness entries (whose planted-input fits would
@@ -1661,23 +1629,8 @@ object Llm {
     * `dir + "#<witness>"` so invalidateCellCache clears them too. */
   private def ivfCellsMemo(spark: SparkSession, key: String)(
       build: => (graft.engine.Quantizer, DataFrame))
-      : (graft.engine.Quantizer, DataFrame) = {
-    val perSession = cellCache
-      .computeIfAbsent(spark, _ => scala.collection.concurrent.TrieMap.empty)
-    // serialize first-caller builds (the islandSummaryTable rule): an
-    // unsynchronized get-then-put lets concurrent first callers run
-    // duplicate KMeans fits, and the loser's persisted cells frame
-    // stays pinned in the cache manager with no handle to unpersist
-    perSession.synchronized {
-      perSession.get(key).flatMap(r => Option(r.get())) match {
-        case Some(v) => v
-        case None =>
-          val v = build
-          perSession.put(key, new java.lang.ref.SoftReference(v))
-          v
-      }
-    }
-  }
+      : (graft.engine.Quantizer, DataFrame) =
+    graft.util.TableMemo.getOrBuildSoft(cellCache, spark, key)(build)
 
   private def ivfCells(spark: SparkSession, dir: String)
       : (graft.engine.Quantizer, DataFrame) =
@@ -1751,20 +1704,20 @@ object Llm {
         // minK² < 37k vectors, so the whole unit-normalized fit set is
         // a ≤20 MB collect — and the former MLlib fit (random init,
         // 8 Lloyd passes, its own persist) cost ~10 sequential jobs of
-        // pure latency for it. AnnFitProbe priced the same fit
-        // driver-side at 0.4 s (collect + 8 exact-argmin passes)
-        // against 2-6 s through MLlib on this corpus, and EVERY cold
-        // fit row (ann_index, ann_pq_index + forced twins, ivf/knn fit
-        // regimes, semdedup, decontam) pays it. Same ingredients as
-        // the ≥minK fitCentroids: hash-ordered seeding
-        // (xxhash64(vec_id, 42)), 8 passes, degenerate rows dropped
-        // from the fit; empty cells keep their previous centroid.
-        // The centroids CHANGE vs the MLlib model (different init
-        // draw) — a rows-only-face change gated exactly like the
-        // round-13 k-means||→random swap: ApproxRecallSpec planted
-        // recall, AnnIndexSpec parity, forced-witness oracles.
-        // Iteration order is pinned by a local vec_id sort, so the
-        // float sums are partitioning-independent.
+        // pure latency for it. The fit probe (OPTIMIZATION_r14.md §8,
+        // fit before/after) priced the same fit driver-side at 0.4 s
+        // (collect + 8 exact-argmin passes) against 2-6 s through
+        // MLlib on this corpus, and EVERY cold fit row (ann_index,
+        // ann_pq_index + forced twins, ivf/knn fit regimes, semdedup,
+        // decontam) pays it. Same ingredients as the ≥minK
+        // fitCentroids: hash-ordered seeding (xxhash64(vec_id, 42)), 8
+        // passes, degenerate rows dropped from the fit; empty cells
+        // keep their previous centroid. The centroids CHANGE vs the
+        // MLlib model (different init draw) — a rows-only-face change
+        // gated exactly like the round-13 k-means||→random swap:
+        // ApproxRecallSpec planted recall, AnnIndexSpec parity,
+        // forced-witness oracles. Iteration order is pinned by a local
+        // vec_id sort, so the float sums are partitioning-independent.
         val collected = embRaw
           .select(col("vec_id"),
             graft.functions.UnitNorm(spark, col("e")).as("u"),
@@ -2034,16 +1987,14 @@ object Llm {
   private val pqIters = 12
 
   /** Memoized PQ-encoded corpus per (session, dir) — same lifecycle
-    * idiom as cellCache (weak session key, soft value, persist NOT
+    * as cellCache (weak session key, soft value, persist NOT
     * localCheckpoint so the memo survives the harnesses' cache
     * purges via lineage recompute). Value: (flat codebook, m, ks,
     * sub, codes frame (vec_id, cell, unit, codes array<int>)). */
-  private val pqCache = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession, scala.collection.concurrent.TrieMap[
-      String, java.lang.ref.SoftReference[
-        (Array[Double], Int, Int, Int, DataFrame)]]])
+  private val pqCache = graft.util.TableMemo
+    .soft[(Array[Double], Int, Int, Int, DataFrame)]()
 
-  def invalidatePqCache(): Unit = pqCache.clear()
+  def invalidatePqCache(): Unit = pqCache.invalidate()
 
   /** Product-quantization encoding of the embeddings corpus (Jégou,
     * Douze, Schmid: "Product Quantization for Nearest Neighbor
@@ -2064,22 +2015,8 @@ object Llm {
     * per call. */
   private def pqMemo(spark: SparkSession, key: String)(
       build: => (Array[Double], Int, Int, Int, DataFrame))
-      : (Array[Double], Int, Int, Int, DataFrame) = {
-    val perSession = pqCache
-      .computeIfAbsent(spark, _ => scala.collection.concurrent.TrieMap.empty)
-    // serialize first-caller builds (the ivfCells rule; the codes
-    // frame is persisted — a racing duplicate would strand the
-    // loser's copy in the cache manager)
-    perSession.synchronized {
-      perSession.get(key).flatMap(r => Option(r.get())) match {
-        case Some(v) => v
-        case None =>
-          val v = build
-          perSession.put(key, new java.lang.ref.SoftReference(v))
-          v
-      }
-    }
-  }
+      : (Array[Double], Int, Int, Int, DataFrame) =
+    graft.util.TableMemo.getOrBuildSoft(pqCache, spark, key)(build)
 
   private[graft] def pqCodes(spark: SparkSession, dir: String)
       : (Array[Double], Int, Int, Int, DataFrame) =
@@ -2196,32 +2133,20 @@ object Llm {
   /** Memoized persisted ANN index per (session, dir): the build is a
     * one-time index-maintenance step (a nightly job in a real
     * deployment) — repeat invocations pay only the snapshot READ.
-    * Same lifecycle idiom as Advanced.skipTableCache; values are
-    * plain path strings so the weak session key stays collectable. */
-  private val annIndexCache = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, String]])
+    * Same lifecycle as Advanced.skipTableCache; values are plain path
+    * strings so the weak session key stays collectable. */
+  private val annIndexCache = graft.util.TableMemo.paths()
 
   /** Explicit invalidation (regenerated fixtures in-session), deleting
     * the committed index dirs so invalidation reclaims disk too. */
-  def invalidateAnnIndexCache(): Unit = {
-    val paths = annIndexCache.synchronized {
-      val ps = scala.jdk.CollectionConverters.CollectionHasAsScala(
-        annIndexCache.values).asScala.flatMap(_.values).toList
-      annIndexCache.clear()
-      ps
-    }
-    paths.foreach(graft.util.Fs.deleteRecursively)
-  }
+  def invalidateAnnIndexCache(): Unit = annIndexCache.invalidate()
 
   /** The committed index for (session, dir) if one was already built
     * this session (via `q_llm_ann_index` / [[annIndexPath]]) — the
     * dispatch test [[annIvf]] and [[knnJoinIvfServe]] run before
     * falling back to the in-session fit. Never builds. */
   private[graft] def committedAnnIndex(spark: SparkSession,
-      dir: String): Option[String] = annIndexCache.synchronized {
-    Option(annIndexCache.get(spark)).flatMap(_.get(dir))
-  }
+      dir: String): Option[String] = annIndexCache.peek(spark, dir)
 
   /** Test seam: whether the cell-index memo holds an entry for `key`
     * in `spark`'s session — lets a spec assert the committed-index
@@ -2229,34 +2154,17 @@ object Llm {
     * alone cannot tell the regimes apart: AnnIndexSpec pins them
     * row-identical by design). */
   private[graft] def cellCacheContains(spark: SparkSession,
-      key: String): Boolean = cellCache.synchronized {
-    Option(cellCache.get(spark))
-      .exists(m => m.get(key).flatMap(r => Option(r.get())).isDefined)
-  }
+      key: String): Boolean =
+    cellCache.peek(spark, key).exists(_.get() != null)
 
-  private def annIndexPath(spark: SparkSession, dir: String): String = {
-    val per = annIndexCache.synchronized {
-      val m = annIndexCache.get(spark)
-      if (m != null) m else {
-        val fresh = scala.collection.concurrent.TrieMap.empty[String, String]
-        annIndexCache.put(spark, fresh)
-        fresh
-      }
+  private def annIndexPath(spark: SparkSession, dir: String): String =
+    annIndexCache.getOrBuild(spark, dir) {
+      val tmp = graft.util.Fs.tempDir("graft_ann_index")
+      graft.engine.AnnIndex.build(spark,
+        Tables(spark, dir, "embeddings").select(col("vec_id"),
+          col("embedding").cast("array<double>").as("e")), tmp)
+      tmp
     }
-    // serialize first-caller builds (the islandSummaryTable rule):
-    // TrieMap.getOrElseUpdate may evaluate a racing builder twice, and
-    // the loser's fully-built index dir would leak untracked —
-    // invalidateAnnIndexCache() could never delete it
-    per.synchronized {
-      per.getOrElseUpdate(dir, {
-        val tmp = graft.util.Fs.tempDir("graft_ann_index")
-        graft.engine.AnnIndex.build(spark,
-          Tables(spark, dir, "embeddings").select(col("vec_id"),
-            col("embedding").cast("array<double>").as("e")), tmp)
-        tmp
-      })
-    }
-  }
 
   /** L3 as a SERVABLE ARTIFACT ([[graft.engine.AnnIndex]]): the IVF
     * index committed as VersionedTables (centroids + cell-clustered
@@ -2313,23 +2221,12 @@ object Llm {
     * shortlist float page-in, exact re-rank — and the >= 0.999 filter
     * keeps exactly the planted copies, DuckDB-hashable. */
   val annIndexServePqForced: Q = (spark, dir) => {
-    val per = annIndexCache.synchronized {
-      val m = annIndexCache.get(spark)
-      if (m != null) m else {
-        val fresh = scala.collection.concurrent.TrieMap.empty[String, String]
-        annIndexCache.put(spark, fresh)
-        fresh
-      }
-    }
-    // the annIndexPath build-serialization rule, keyed separately so
-    // the forced index never shadows the real one
-    val idx = per.synchronized {
-      per.getOrElseUpdate(dir + "#forcedpq", {
-        val tmp = graft.util.Fs.tempDir("graft_ann_index_forced")
-        graft.engine.AnnIndex.build(spark, pqForcedInput(spark, dir), tmp)
-        graft.engine.AnnIndex.buildPq(spark, tmp)
-        tmp
-      })
+    // keyed separately so the forced index never shadows the real one
+    val idx = annIndexCache.getOrBuild(spark, dir + "#forcedpq") {
+      val tmp = graft.util.Fs.tempDir("graft_ann_index_forced")
+      graft.engine.AnnIndex.build(spark, pqForcedInput(spark, dir), tmp)
+      graft.engine.AnnIndex.buildPq(spark, tmp)
+      tmp
     }
     val qe = Tables(spark, dir, "embeddings")
       .filter(col("vec_id") === 0)
@@ -3915,10 +3812,10 @@ object Llm {
       // loss).
       .localCheckpoint(true)
     // identical-signature CLASS collapse before the banded join
-    // (round-14 MmProbe conviction: the doc-level band join read
-    // 26.2 s / 7.3 GB spill at x30 and DIED at x100 — identical
-    // synthetic images putting whole dup groups into every band
-    // bucket made the candidate join quadratic in group size).
+    // (BASELINE.md "Round-14 multimodal deep record": the doc-level
+    // band join read 26.2 s / 7.3 GB spill at x30 and DIED at x100 —
+    // identical synthetic images putting whole dup groups into every
+    // band bucket made the candidate join quadratic in group size).
     // Hamming-0 groups are exact signature duplicates, so the banded
     // candidates over one representative per class + a final
     // expansion is RESULT-IDENTICAL (the DuckDB oracle still runs the
@@ -3933,9 +3830,10 @@ object Llm {
         collect_list(col("doc_id")).as("members"))
       .localCheckpoint(true)
     val reps = classes.select(col("rep") +: (0 to 7).map(i => col(s"r$i")): _*)
-    // verify-IN-join (second round-14 MmProbe conviction): the
-    // class-level candidates still exploded at x100 (319 s / 20.6 GB
-    // spill) because the band buckets saturate on this fixture and
+    // verify-IN-join (second conviction of BASELINE.md "Round-14
+    // multimodal deep record"): the class-level candidates still
+    // exploded at x100 (319 s / 20.6 GB spill) because the band
+    // buckets saturate on this fixture and
     // every C(bucket,2) pair was MATERIALIZED through a distinct plus
     // two sig lookup joins before the hamming filter ran. Carrying
     // the 8 signature rows ON the band rows lets the hamming
@@ -3990,17 +3888,18 @@ object Llm {
   }
 
   /** The CLASS-pair production face of the perceptual-hash family —
-    * the output-capped discipline the round-14 MmProbe verdict called
-    * for: on a corpus whose signature space collapses (boilerplate
-    * mega-classes — the inflated fixture reads ~45M doc pairs at x30,
-    * ~700M at x100, QUADRATIC in dup-class size by contract), the
-    * doc-pair expansion is output-bound while THIS face stays linear
-    * in the class count. One row per qualified cross-class rep pair
-    * (hamming 1..6) plus one per dup class (rep_a = rep_b, hamming 0),
-    * each carrying `pairs` — the doc-pair multiplicity the expansion
-    * face would emit — so downstream dedup accounting loses nothing.
-    * Consumers needing the actual pairs for a SPECIFIC class join the
-    * members list back on demand. */
+    * the output-capped discipline the verdict of BASELINE.md
+    * "Round-14 multimodal deep record" called for: on a corpus whose
+    * signature space collapses (boilerplate mega-classes — the inflated
+    * fixture reads ~45M doc pairs at x30, ~700M at x100, QUADRATIC in
+    * dup-class size by contract), the doc-pair expansion is
+    * output-bound while THIS face stays linear in the class count. One
+    * row per qualified cross-class rep pair (hamming 1..6) plus one per
+    * dup class (rep_a = rep_b, hamming 0), each carrying `pairs` — the
+    * doc-pair multiplicity the expansion face would emit — so
+    * downstream dedup accounting loses nothing. Consumers needing the
+    * actual pairs for a SPECIFIC class join the members list back on
+    * demand. */
   val mmPhashClasses: Q = (spark, dir) => {
     val (classes, crossQ) = mmPhashClassFrames(spark, dir)
     val sizes = classes.select(col("rep"),

@@ -29,41 +29,20 @@ object Ml {
   private val featureCols = Array("l_quantity", "l_extendedprice", "l_discount")
 
   /** Seed-fixed fits are deterministic per (session, dir) — memoize so
-    * q_ml_kmeans and q_ml_phase_rows don't each pay a full fit.
-    * Keyed WEAKLY by the live session object (a WeakHashMap, so a
-    * stopped session's DataFrame/persisted lineage is collectable with
-    * the session rather than pinned forever, and distinct sessions can
-    * never collide the way a recycled identity hash can). The cached
-    * DataFrame strongly references its session, so it sits behind a
-    * SoftReference — a strong value would pin the weak key and the map
-    * could never evict; under memory pressure the soft ref clears and
-    * the value→session cycle breaks. `invalidateFitCache()` drops
-    * everything explicitly (e.g. when the data under `dir` changes). */
-  private val fitCache = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-      scala.collection.concurrent.TrieMap[String,
-        java.lang.ref.SoftReference[org.apache.spark.sql.DataFrame]]])
+    * q_ml_kmeans and q_ml_phase_rows don't each pay a full fit. The
+    * soft-valued [[graft.util.TableMemo]] form: a weak session key, and
+    * a soft value because the cached DataFrame references its session.
+    * `invalidateFitCache()` drops everything explicitly (e.g. when the
+    * data under `dir` changes). */
+  private val fitCache =
+    graft.util.TableMemo.soft[org.apache.spark.sql.DataFrame]()
 
-  def invalidateFitCache(): Unit = fitCache.clear()
+  def invalidateFitCache(): Unit = fitCache.invalidate()
 
   private def clusteredRows(spark: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame = {
-    val perSession = fitCache
-      .computeIfAbsent(spark, _ => scala.collection.concurrent.TrieMap.empty)
-    // serialize first-caller builds (the Llm memo rule): an
-    // unsynchronized get-then-put lets concurrent first callers run
-    // duplicate KMeans fits, and the loser's persisted scaled frame
-    // stays pinned in the cache manager with no handle to unpersist
-    perSession.synchronized {
-      perSession.get(dir).flatMap(r => Option(r.get())) match {
-        case Some(df) => df
-        case None =>
-          val df = fitClusteredRows(spark, dir)
-          perSession.put(dir, new java.lang.ref.SoftReference(df))
-          df
-      }
-    }
-  }
+      dir: String): org.apache.spark.sql.DataFrame =
+    graft.util.TableMemo.getOrBuildSoft(fitCache, spark, dir)(
+      fitClusteredRows(spark, dir))
 
   /** M1+M2 shared core: scaled features -> KMeans(k=3, seed=42) row
     * assignments. */

@@ -49,8 +49,8 @@ object Inflate {
   }
 
   /** The embeddings table alone, same perturbed construction as
-    * [[apply]] — the deep-factor index/serving probes (x300) inflate
-    * only what the ANN family reads. */
+    * [[apply]] — QuantizerProbe inflates only what the ANN family
+    * reads. */
   def embeddingsOnly(spark: SparkSession, src: String, dst: String,
       factor: Int): Unit = {
     val base = graft.engine.Tables(spark, src, "embeddings")
@@ -78,12 +78,9 @@ object Inflate {
     else unionTree(dfs.grouped(2).map(g =>
       if (g.size == 2) g(0).unionByName(g(1)) else g(0)).toSeq)
 
-  /** The documents table alone, same construction as [[apply]] (the
-    * per-copy vocabulary prefix keeps the duplicate RATE constant as
-    * the corpus grows) — the deep-factor probes (x300/x1000) inflate
-    * only the table their flagships read instead of paying a full
-    * x1000 fixture write. */
-  def documentsOnly(spark: SparkSession, src: String, dst: String,
+  /** The documents table: the per-copy vocabulary prefix keeps the
+    * duplicate RATE constant as the corpus grows. */
+  private def documentsOnly(spark: SparkSession, src: String, dst: String,
       factor: Int): Unit = {
     val base = graft.engine.Tables(spark, src, "documents")
     val copies = (0 until factor).map { i =>
@@ -94,7 +91,7 @@ object Inflate {
     }
     // Balanced union tree: a left-deep reduce of a 1000-way union makes
     // Catalyst analysis quadratic in the factor; pairwise halving keeps
-    // the plan depth log(factor) for the deep-factor (x300/x1000) probes.
+    // the plan depth log(factor).
     unionTree(copies).write.mode("overwrite")
       .parquet(s"$dst/documents.parquet")
   }

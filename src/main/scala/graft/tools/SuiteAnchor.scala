@@ -42,7 +42,7 @@ object SuiteAnchor {
     // round-7 write-shaped: the DML entries commit a three-version
     // VersionedTable; the ANN entry builds and commits the index
     "q_table_dml", "q_table_changes", "q_llm_ann_index",
-    // round-10 write-shaped: with invalidateMemos() running before
+    // round-10 write-shaped: with every memo invalidated before
     // EVERY timed pass, these re-pay their committed-table build on
     // the warm run too — shard_resume the partitionBy(shard) corpus
     // write, variant_shredded the shred commit, bpe_apply the
@@ -51,22 +51,6 @@ object SuiteAnchor {
     // round-12: the multi-path shred entry commits its snapshot the
     // same way the single-path one does
     "q_fn_variant_multi_shredded")
-
-  private def invalidateMemos(): Unit = {
-    graft.ops.Ml.invalidateFitCache()
-    graft.ops.Llm.invalidateCellCache()
-    graft.ops.Llm.invalidateClusterLabelCache()
-    graft.ops.Llm.invalidateIslandsCache()
-    graft.ops.Llm.invalidateSnapshotSigCache()
-    graft.ops.Llm.invalidateAnnIndexCache()
-    graft.ops.Advanced.invalidateSkipTableCache()
-    graft.ops.Advanced.invalidateDmlTableCache()
-    graft.ops.Advanced.invalidateBucketTableCache()
-    graft.ops.Llm.invalidatePqCache()
-    graft.ops.ScalarFns.invalidateShredTableCache()
-    graft.ops.Llm.invalidateShardTableCache()
-    graft.ops.Llm.invalidateBpeTableCache()
-  }
 
   def main(args: Array[String]): Unit = {
     val factor = args.headOption.map(_.toInt).getOrElse(10)
@@ -95,7 +79,7 @@ object SuiteAnchor {
 
     val results = suite.map { case (name, fn) =>
       def once(): Either[String, Double] = {
-        invalidateMemos()
+        graft.util.TableMemo.invalidateAll()
         spark.sharedState.cacheManager.clearCache()
         spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
         val t0 = System.nanoTime()

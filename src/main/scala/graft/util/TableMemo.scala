@@ -1,12 +1,14 @@
 package graft.util
 
 /** Memoized written-artifact registry per (session, dir) — ONE copy of
-  * the lifecycle idiom every dir-keyed table memo in the engine shares
+  * the lifecycle idiom every session memo in the engine shares
   * (islands summary, Z-ordered skip table, DML fixture, shredded
-  * events, shard table, tokenizer artifact, bucketed join tables). The
-  * shape exists because a persisted frame dies under the bench/anchor
-  * harnesses' per-query cache clearing, while a written
-  * parquet/VersionedTable survives and costs one scan.
+  * events, shard table, tokenizer artifact, bucketed join tables,
+  * canonical entities, incremental-dedup snapshot, cluster labels,
+  * ANN index; softly held: IVF cells, PQ codes, KMeans fit). The
+  * written-table shape exists because a persisted frame dies under
+  * the bench/anchor harnesses' per-query cache clearing, while a
+  * written parquet/VersionedTable survives and costs one scan.
   *
   * Lifecycle rules the helper centralizes (each was a hand-propagated
   * fix across the former per-site copies):
@@ -33,6 +35,13 @@ package graft.util
   * the plain-paths form ([[TableMemo.paths]]) deletes the directory;
   * the bucketed-tables site additionally drops catalog entries. The
   * session argument may be null/stopped when eviction outlives it.
+  * In-memory values (a fitted frame, which references its session)
+  * sit behind a SoftReference with a no-op eviction
+  * ([[TableMemo.soft]]): a strong value would pin the weak key.
+  *
+  * Every memo registers itself on construction, so
+  * [[TableMemo.invalidateAll]] reaches all of them without a
+  * hand-kept list.
   */
 final class TableMemo[V](
     onEvict: (org.apache.spark.sql.SparkSession, V) => Unit) {
@@ -100,11 +109,49 @@ final class TableMemo[V](
     }
     entries.foreach { case (spark, vs) => vs.foreach(onEvict(spark, _)) }
   }
+
+  // last, so invalidateAll never sees a half-constructed memo
+  TableMemo.registry.add(this)
 }
 
 object TableMemo {
+  private val registry =
+    new java.util.concurrent.CopyOnWriteArrayList[TableMemo[_]]()
+
+  /** Invalidates every memo constructed so far — the "nothing served
+    * from a memo" reset a harness runs before each timed query. */
+  def invalidateAll(): Unit = registry.forEach(_.invalidate())
+
   /** The common form: values are written-table paths; eviction deletes
     * the directory. */
   def paths(): TableMemo[String] =
     new TableMemo[String]((_, p) => Fs.deleteRecursively(p))
+
+  /** The in-memory form: values are softly held, so memory pressure
+    * can break the value -> session path; eviction does nothing (it
+    * does not unpersist a cached frame). Read through [[getOrBuildSoft]]. */
+  def soft[V](): TableMemo[java.lang.ref.SoftReference[V]] =
+    new TableMemo[java.lang.ref.SoftReference[V]]((_, _) => ())
+
+  /** The live value for `key`, rebuilding when the soft reference was
+    * cleared — a cleared entry is evicted, never handed out as null.
+    * A value built by this call is held strongly until it is returned,
+    * so a collection right after the build cannot force a second one. */
+  @annotation.tailrec
+  def getOrBuildSoft[V <: AnyRef](
+      memo: TableMemo[java.lang.ref.SoftReference[V]],
+      spark: org.apache.spark.sql.SparkSession, key: String)(
+      build: => V): V = {
+    var built: Option[V] = None
+    val ref = memo.getOrBuild(spark, key) {
+      built = Some(build)
+      new java.lang.ref.SoftReference(built.get)
+    }
+    Option(ref.get()).orElse(built) match {
+      case Some(v) => v
+      case None =>
+        memo.evict(spark, key)
+        getOrBuildSoft(memo, spark, key)(build)
+    }
+  }
 }

@@ -94,4 +94,12 @@ class LintSpec extends AnyFunSuite {
       .filter(h => scoped.exists(s => h.startsWith(s"src/main/scala/graft/$s/")))
     assert(hits.isEmpty, hits.mkString("\n"))
   }
+
+  test("no hand-rolled session memo (every per-session memo runs on " +
+      "util/TableMemo: one lifecycle, one invalidateAll, and the " +
+      "racing-invalidate defence)") {
+    val hits = offenders("""WeakHashMap|SoftReference""")
+      .filterNot(_.startsWith("src/main/scala/graft/util/TableMemo.scala:"))
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
 }

@@ -57,4 +57,40 @@ class TableMemoSpec extends SparkTestBase {
     assert(!Files.exists(Paths.get(served)),
       "the rebuilt table must be registered in the live map")
   }
+
+  test("invalidateAll evicts every registered memo") {
+    val memos = Seq(TableMemo.paths(), TableMemo.paths())
+    val written = memos.zipWithIndex.map { case (m, i) =>
+      m.getOrBuild(spark, s"k$i") {
+        val p = Fs.tempDir("graft_memo_all")
+        Files.writeString(Paths.get(p, "marker"), "x")
+        p
+      }
+    }
+    assert(written.forall(p => Files.exists(Paths.get(p))))
+    TableMemo.invalidateAll()
+    assert(written.forall(p => !Files.exists(Paths.get(p))),
+      s"invalidateAll must delete every memo's table: $written")
+    assert(memos.zipWithIndex.forall { case (m, i) =>
+      m.peek(spark, s"k$i").isEmpty })
+  }
+
+  test("a soft-valued entry whose reference was cleared is rebuilt, " +
+      "never handed out as null") {
+    val memo = TableMemo.soft[String]()
+    var builds = 0
+    def get() = TableMemo.getOrBuildSoft(memo, spark, "k") {
+      builds += 1
+      new String(s"v$builds")
+    }
+    val first = get()
+    assert(first == "v1" && (get() eq first), "a live value memoizes")
+    // what memory pressure does to the memoized reference
+    memo.peek(spark, "k").get.clear()
+    val second = get()
+    assert(second == "v2", "a cleared reference must trigger a rebuild")
+    assert(memo.peek(spark, "k").exists(_.get() eq second),
+      "the rebuilt value must replace the cleared entry")
+    memo.invalidate()
+  }
 }
