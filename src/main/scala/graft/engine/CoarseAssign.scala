@@ -32,9 +32,11 @@ import org.apache.spark.sql.functions._
   * Assignment is APPROXIMATE at the super-cell boundary (a vector's
   * true argmin centroid can be pruned when it registers under none of
   * the vector's chosen super's members) — the same boundary-error
-  * class nprobe already covers by design on the query side, and
-  * QuantizerProbe's `assign` mode prices it: agreement with the exact
-  * rule and natural top-10 recall under both rules, at probe scales.
+  * class nprobe already covers by design on the query side; its price
+  * (agreement with the exact rule and natural top-10 recall under
+  * both rules, at probe scales) is recorded in
+  * BASELINE.md "Round-14 two-level (coarse-of-coarse) IVF assign +
+  * fit".
   * The pruned plan only runs above [[minK]] centroids; every
   * bench/test-scale corpus (k ≤ 45 at sf0.1) keeps the EXACT rule
   * bitwise-unchanged, so oracle rows and the forced hash-gated
@@ -74,8 +76,9 @@ object CoarseAssign {
   /** Assignment-side super fan-out: each vector scans the candidate
     * slices of its `superProbes` nearest supers. On the clustered
     * inflated corpus one super lost ~10 recall points vs the exact
-    * rule (QuantizerProbe `assign`, x30); two restores it — see the
-    * probe table in BASELINE.md. Per-vector scorings stay
+    * rule (x30); two restores it — see the probe table in
+    * BASELINE.md "Round-14 two-level (coarse-of-coarse) IVF assign +
+    * fit". Per-vector scorings stay
     * (1 + superProbes·overlapR)·√k ≪ k. */
   val superProbes = 2
 
@@ -233,7 +236,7 @@ object CoarseAssign {
     * the broadcast structure rides to executors once and the kernel
     * runs inside the scan's codegen span, no fanout, no shuffle. (A
     * first cut expressed the two passes as crossJoin+min_by DataFrame
-    * stages; QuantizerProbe `assign` measured the HOF scoring ~40×
+    * stages; the round-14 assign probe measured the HOF scoring ~40×
     * slower per comparison than primitive-array arithmetic — see
     * IvfCellAssign's scaladoc.) */
   def pruned(vectors: DataFrame,
@@ -255,8 +258,8 @@ object CoarseAssign {
     * and take per-cell means in one pass with the VectorAvg
     * aggregator (no posexplode fan-out). An empty cell keeps its
     * previous center. Init is k sample rows in seeded-hash order —
-    * the random init the round-13 QuantizerProbe decision already
-    * retired k-means|| for.
+    * the random init BASELINE.md "Round-13 IVF quantizer init:
+    * k-means|| retired for random" records.
     *
     * `sample` must carry (vec_id, e). Runs only in the ≥ [[minK]]
     * regime (fitIvfCellsOn keeps MLlib's fit below it), so every

@@ -95,25 +95,28 @@ object Metrics {
     * apart, 5 s cap) before detaching — the public-API equivalent of
     * the internal `waitUntilEmpty`. */
   def measure[A](spark: SparkSession)(body: => A): (A, QueryMetrics) = {
+    // wait for `m`'s task count to go quiet: two identical reads 100 ms
+    // apart, with an absolute 5 s cap — a foreign job emitting a steady
+    // task stream must bound the wait, not extend it forever
+    def quiesce(m: Meter): Unit = {
+      val t = System.nanoTime()
+      var last = -1
+      while (m.tasks.get != last && (System.nanoTime() - t) < 5000000000L) {
+        last = m.tasks.get
+        Thread.sleep(100)
+      }
+    }
     // Quiesce the async bus BEFORE attaching: task-end events from a
     // previous query still draining on the listener bus are delivered
     // to every listener registered at DISPATCH time, so a meter
     // attached while the backlog drains would absorb the previous
     // query's tasks (back-to-back measure() calls, as Bench runs).
-    // Same two-stable-reads loop as the tail wait, against a
-    // throwaway counter that sees exactly the backlog.
+    // The throwaway counter sees exactly the backlog.
     locally {
       val probe = new Meter
       spark.sparkContext.addSparkListener(probe)
-      try {
-        val t = System.nanoTime()
-        var last = -1
-        while (probe.tasks.get != last &&
-            (System.nanoTime() - t) < 5000000000L) {
-          last = probe.tasks.get
-          Thread.sleep(100)
-        }
-      } finally spark.sparkContext.removeSparkListener(probe)
+      try quiesce(probe)
+      finally spark.sparkContext.removeSparkListener(probe)
     }
     val meter = new Meter
     spark.sparkContext.addSparkListener(meter)
@@ -121,15 +124,7 @@ object Metrics {
     try {
       val result = body
       val wallMs = (System.nanoTime() - t0) / 1000000
-      // absolute 5 s cap: a foreign job emitting a steady task stream
-      // must bound the wait, not extend it forever
-      val tEnd = System.nanoTime()
-      var last = -1
-      while (meter.tasks.get != last &&
-          (System.nanoTime() - tEnd) < 5000000000L) {
-        last = meter.tasks.get
-        Thread.sleep(100)
-      }
+      quiesce(meter)
       val durs = {
         val it = meter.durations.iterator()
         val b = scala.collection.mutable.ArrayBuffer.empty[Long]

@@ -35,7 +35,8 @@ private[graft] case class IvfAssignStructure(
   * crossJoin+min_by pruned plan read 7.7-10.8 s at x30 where MLlib's
   * primitive-kernel transform-all read 0.25 s — a 10× scoring-count
   * win buried under a ~40× per-scoring interpretation loss
-  * (QuantizerProbe `assign`, round-14 first cut). This expression
+  * (BASELINE.md "Round-14 two-level (coarse-of-coarse) IVF assign +
+  * fit", first cut). This expression
   * keeps the √k scoring count AND the primitive kernel: one virtual
   * call per row from inside WholeStageCodegen, a tight double-array
   * loop inside, zero shuffle (the old plan paid a groupBy pass), and
@@ -93,9 +94,11 @@ case class IvfCellAssign(child: Expression,
     // pass 1: the top-`superProbes` supers by distance (the
     // assignment-side twin of query-side nprobe: on clustered corpora
     // near-coincident centroids make a single-super prune lossy —
-    // QuantizerProbe `assign` at x30 read recall 69.2% vs exact 79.6%
-    // with one super, restored by probing two). Insertion into a
-    // w-sized ordered scratch; ties keep the lower super index.
+    // the round-14 assign probe at x30 read recall 69.2% vs exact
+    // 79.6% with one super, restored by probing two; BASELINE.md
+    // "Round-14 two-level (coarse-of-coarse) IVF assign + fit").
+    // Insertion into a w-sized ordered scratch; ties keep the lower
+    // super index.
     val nSup = st.memberOff.length - 1
     val w = math.min(st.superProbes, nSup)
     val topS = new Array[Int](w)

@@ -142,8 +142,6 @@ object Advanced {
         graft.util.Fs.deleteRecursively(b)
       })
 
-  def invalidateBucketTableCache(): Unit = bucketTableCache.invalidate()
-
   /** The bucketed tables behind [[bucketedJoin]], built ONCE per
     * (session, dir) — the scaladoc's "one-time cost a warehouse pays"
     * was previously paid (and a pair of fact-sized temp dirs leaked,
@@ -370,11 +368,6 @@ object Advanced {
     * key stays collectable — unlike the DataFrame-valued caches, no
     * SoftReference indirection is needed here. */
   private val skipTableCache = graft.util.TableMemo.paths()
-
-  /** Explicit invalidation, mirroring Ml.invalidateFitCache /
-    * Llm.invalidateCellCache — without it a regenerated `dir`
-    * in-session would silently serve the stale Z-ordered table. */
-  def invalidateSkipTableCache(): Unit = skipTableCache.invalidate()
 
   private def zorderedTable(spark: org.apache.spark.sql.SparkSession,
       dir: String): String =

@@ -679,8 +679,8 @@ object Llm {
     (_, v) => graft.util.Fs.deleteRecursively(v._1))
 
   /** Clears the memo AND deletes the written labels tables —
-    * invalidation reclaims the disk, not just the pointer (the same
-    * contract as Advanced.invalidateSkipTableCache). */
+    * invalidation reclaims the disk, not just the pointer (the
+    * TableMemo.invalidate contract). */
   def invalidateClusterLabelCache(): Unit = labelCache.invalidate()
 
   /** Pair-count bound for the LOCAL connected-components path: at or
@@ -2467,36 +2467,31 @@ object Llm {
     * The trace is regime-INDEPENDENT by construction — deltas are
     * exact integer arithmetic on the same explode expression — and
     * the strict-mode merge-for-merge spec plus a forced-incremental
-    * equality spec gate it. `roundStats` (probe-only) collects
-    * (round, affectedWords, totalWords) so the sliver claim is
-    * measured, not asserted. */
+    * equality spec gate it. */
   private[graft] def bpeTrainMergesBatched(spark: SparkSession, dir: String,
-      target: Int, maxPerRound: Int = 48,
-      strictPrefix: Boolean = true,
-      roundStats: Option[scala.collection.mutable.ArrayBuffer[(Int, Long, Long)]]
-        = None,
+      target: Int, strictPrefix: Boolean = true,
       incremental: Option[Boolean] = None): DataFrame =
     bpeTrainMergesBatchedOn(spark,
       tokenized(spark, dir)
         .select(explode(col("t")).as("w"))
         .filter(col("w") =!= "")
         .groupBy(col("w")).agg(count(lit(1)).as("n")),
-      target, maxPerRound, strictPrefix, roundStats, incremental)
+      target, strictPrefix, incremental)
 
   /** Below this many distinct words the recount regime wins on fixed
     * per-job overhead; above it the full pair explode is the envelope
     * and the incremental sliver update takes over. */
   private[graft] val bpeIncrementalVocabBound = 100000L
 
+  /** Merges accepted per batched round. */
+  private val bpeMaxPerRound = 48
+
   /** Frame-input face: `wordCounts` = (w STRING, n LONG) distinct
     * words with corpus frequencies — the seam the synthetic-vocab
     * probe and the forced-regime specs use. */
   private[graft] def bpeTrainMergesBatchedOn(spark: SparkSession,
       wordCounts: org.apache.spark.sql.DataFrame,
-      target: Int, maxPerRound: Int = 48,
-      strictPrefix: Boolean = true,
-      roundStats: Option[scala.collection.mutable.ArrayBuffer[(Int, Long, Long)]]
-        = None,
+      target: Int, strictPrefix: Boolean = true,
       incremental: Option[Boolean] = None): DataFrame = {
     import spark.implicits._
     val vocab = wordCounts
@@ -2522,7 +2517,7 @@ object Llm {
     var exhausted = false
     while (merges.size < target && !exhausted) {
       val pairs = if (inc) pc else pairsOf(v)
-      val want = math.min(maxPerRound, target - merges.size)
+      val want = math.min(bpeMaxPerRound, target - merges.size)
       // the fast mode skips conflicting candidates, so it scans a
       // wider pool to fill the batch; strict mode stops at the first
       // failure and never looks past `want`
@@ -2633,11 +2628,6 @@ object Llm {
           val applied = affected.crossJoin(broadcast(mseq))
             .withColumn("s", expr(foldExpr))
             .select(col("s"), col("n")).localCheckpoint(true)
-          if (roundStats.nonEmpty) {
-            val aff = affected.count()
-            val tot = v.count()
-            roundStats.foreach(_ += ((round, aff, tot)))
-          }
           // sliver delta: subtract the affected words' pre-merge
           // pairs, add their post-merge pairs; zero rows drop. Exact
           // integer arithmetic on the same explode — counts equal a
@@ -2660,10 +2650,6 @@ object Llm {
             .withColumn("s", expr(foldExpr))
             .select(col("s"), col("n"))
             .localCheckpoint(true)
-          if (roundStats.nonEmpty) {
-            val tot = v.count()
-            roundStats.foreach(_ += ((round, tot, tot)))
-          }
         }
         round += 1
       }

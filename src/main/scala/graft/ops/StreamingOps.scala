@@ -21,8 +21,8 @@ object StreamingOps {
   private val canonMemo = graft.util.TableMemo.paths()
 
   /** Drops the memo and deletes the written canon tables — the
-    * bench's cold-regime re-pricing hook (the
-    * invalidateBucketTableCache contract). */
+    * cold-regime re-pricing hook (the TableMemo.invalidate
+    * contract). */
   def invalidateCanonCache(): Unit = canonMemo.invalidate()
 
   /** X5: tumbling 1h window counts — batch form, same code path as the

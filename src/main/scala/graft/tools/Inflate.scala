@@ -49,9 +49,8 @@ object Inflate {
   }
 
   /** The embeddings table alone, same perturbed construction as
-    * [[apply]] — QuantizerProbe inflates only what the ANN family
-    * reads. */
-  def embeddingsOnly(spark: SparkSession, src: String, dst: String,
+    * [[apply]]. */
+  private def embeddingsOnly(spark: SparkSession, src: String, dst: String,
       factor: Int): Unit = {
     val base = graft.engine.Tables(spark, src, "embeddings")
     val copies = (0 until factor).map { i =>

@@ -431,9 +431,7 @@ object ScaleProbe {
       // 31 distinct words at any inflation factor (Inflate replicates
       // rows, not words). Synthesize a factor-scaled vocab (30k
       // distinct 8-char words per x) and race the two forced regimes
-      // on identical input; the sliver stats print shows per-round
-      // affected words — the quantity the incremental regime's cost
-      // tracks — falling to a fraction of the vocab
+      // on identical input
       if (selected("bpe incremental x-vocab")) locally {
         import spark.implicits._
         // 24-char words: the per-round interpreted merge fold is the
@@ -453,18 +451,12 @@ object ScaleProbe {
         val recount = (System.nanoTime() - t0) / 1e9
         results(("bpe recount x-vocab", factor)) = recount
         println(f"== x$factor ${"bpe recount x-vocab"}%-24s $recount%8.2f s")
-        val stats = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Long)]
         val t1 = System.nanoTime()
         graft.util.Exec.drain(Llm.bpeTrainMergesBatchedOn(spark, words,
-          48, strictPrefix = false, roundStats = Some(stats),
-          incremental = Some(true)))
+          48, strictPrefix = false, incremental = Some(true)))
         val incr = (System.nanoTime() - t1) / 1e9
         results(("bpe incremental x-vocab", factor)) = incr
         println(f"== x$factor ${"bpe incremental x-vocab"}%-24s $incr%8.2f s")
-        stats.foreach { case (r, aff, tot) =>
-          println(f"==   bpe round $r%2d affected $aff%8d / $tot%8d words " +
-            f"(${100.0 * aff / math.max(tot, 1)}%5.1f%%)")
-        }
       }
 
       // AQE skew-join probe: join the deliberately-skewed

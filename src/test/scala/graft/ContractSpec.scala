@@ -10,6 +10,23 @@ class ContractSpec extends SparkTestBase {
     assert(missing.isEmpty, s"oracle keys without query impl: $missing")
   }
 
+  test("Bench's regime tables name real rows, and no row is in both") {
+    // a typo in either table would pin or serve nothing, silently
+    val q = SparkEntry.queries.keySet
+    val served = Bench.warmRows.map(_._2).toSet
+    val reported = Bench.warmRows.map(_._1).toSet
+    assert(Bench.coldPins.keySet -- q == Set.empty, "coldPins keys")
+    assert(served -- q == Set.empty, "warmRows served entries")
+    assert(Bench.coldPins.keySet.intersect(reported) == Set.empty,
+      "a row both pinned cold and reported warm")
+    // a warm name other than a self-served row must not be a query
+    // key, or it would shadow that row in the bench record
+    val selfServed = Bench.warmRows.collect { case (r, e) if r == e => r }
+    assert(selfServed == Seq("q_llm_dedup_substr"))
+    assert((reported -- selfServed).intersect(q) == Set.empty,
+      "a warm row shadows a query key")
+  }
+
   test("entry (flagship) returns exactly its limit on sf0.001") {
     // the flagship ends in .limit(10) over 25 nation groups — the
     // deterministic fixture answer is exactly 10. A >0 gate would

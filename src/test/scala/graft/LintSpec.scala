@@ -102,4 +102,11 @@ class LintSpec extends AnyFunSuite {
       .filterNot(_.startsWith("src/main/scala/graft/util/TableMemo.scala:"))
     assert(hits.isEmpty, hits.mkString("\n"))
   }
+
+  test("Bench names rows only in its regime tables (a name-keyed " +
+      "branch is a hand-kept list that drifts)") {
+    val hits = offenders("""== "q_""")
+      .filter(_.startsWith("src/main/scala/graft/Bench.scala:"))
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
 }
