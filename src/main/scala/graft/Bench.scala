@@ -13,15 +13,19 @@ object Bench {
     *    the two committed-index rows to build+commit+serve (their serve
     *    regime has its own warm row);
     *  - q_llm_dedup_substr_rm prices build+commit+removal of the
-    *    islands memo that q_llm_dedup_substr serves. */
+    *    islands memo that q_llm_dedup_substr serves;
+    *  - q_table_dml and q_table_changes share the DML table memo: each
+    *    prices the three-commit build plus its own read. */
   private[graft] val coldPins: Map[String, () => Unit] = {
     val shred = () => graft.ops.ScalarFns.invalidateShredTableCache()
     val ann = () => graft.ops.Llm.invalidateAnnIndexCache()
+    val dml = () => graft.ops.Advanced.invalidateDmlTableCache()
     Map(
       "q_fn_variant" -> shred, "q_fn_variant_multi" -> shred,
       "q_fn_variant_shredded" -> shred, "q_fn_variant_multi_shredded" -> shred,
       "q_llm_ann_ivf" -> ann, "q_llm_knn_join_ivf" -> ann,
       "q_llm_ann_index" -> ann, "q_llm_ann_pq_index" -> ann,
+      "q_table_dml" -> dml, "q_table_changes" -> dml,
       "q_llm_dedup_substr_rm" -> (() => graft.ops.Llm.invalidateIslandsCache()))
   }
 

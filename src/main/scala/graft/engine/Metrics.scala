@@ -1,6 +1,7 @@
 package graft.engine
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
 /** Physical execution metrics for one measured action — the numbers an
@@ -14,7 +15,10 @@ import org.apache.spark.sql.SparkSession
   * the measured window; `peakTaskMemory` is the max single-task
   * execution memory; `maxTaskMs`/`p50TaskMs` summarize the task-time
   * distribution (their ratio is the skew spread the salting probes
-  * report).
+  * report). `jobs` counts the jobs started inside the window (eager
+  * build actions, AQE stage submissions and the final drain alike);
+  * `resultBytes` sums every task's serialized result sent back to the
+  * driver — a `collect` whose payload grows with the rows shows here.
   */
 case class QueryMetrics(
     wallMs: Long,
@@ -27,7 +31,9 @@ case class QueryMetrics(
     diskSpilledBytes: Long,
     peakTaskMemory: Long,
     maxTaskMs: Long,
-    p50TaskMs: Long) {
+    p50TaskMs: Long,
+    jobs: Int,
+    resultBytes: Long) {
 
   /** Straggler ratio within the measured window (1.0 = perfectly
     * uniform; the skew-under-fire probe's headline number). */
@@ -37,12 +43,13 @@ case class QueryMetrics(
   def spilled: Boolean = memorySpilledBytes > 0 || diskSpilledBytes > 0
 
   def pretty: String =
-    f"wall=${wallMs / 1000.0}%.1fs tasks=$tasks " +
+    f"wall=${wallMs / 1000.0}%.1fs jobs=$jobs tasks=$tasks " +
       f"input=${inputBytes / 1048576}%dMB/${inputRecords}%drec " +
       f"shuffleR=${shuffleReadBytes / 1048576}%dMB " +
       f"shuffleW=${shuffleWriteBytes / 1048576}%dMB " +
       f"spill=${memorySpilledBytes / 1048576}%d/${diskSpilledBytes / 1048576}%dMB " +
-      f"peakTask=${peakTaskMemory / 1048576}%dMB spread=$taskSpread%.1f"
+      f"peakTask=${peakTaskMemory / 1048576}%dMB spread=$taskSpread%.1f " +
+      f"result=${resultBytes / 1024}%dKB"
 }
 
 /** Measure the physical execution of an action via a scoped
@@ -73,6 +80,11 @@ object Metrics {
     val spillDisk = new java.util.concurrent.atomic.AtomicLong()
     val peak = new java.util.concurrent.atomic.AtomicLong()
     val durations = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Long]()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val result = new java.util.concurrent.atomic.AtomicLong()
+
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      jobs.incrementAndGet()
 
     override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
       Option(e.taskMetrics).foreach { m =>
@@ -84,6 +96,7 @@ object Metrics {
         spillMem.addAndGet(m.memoryBytesSpilled)
         spillDisk.addAndGet(m.diskBytesSpilled)
         peak.accumulateAndGet(m.peakExecutionMemory, math.max(_, _))
+        result.addAndGet(m.resultSize)
         Option(e.taskInfo).foreach(i => durations.add(i.duration))
       }
   }
@@ -142,7 +155,9 @@ object Metrics {
         diskSpilledBytes = meter.spillDisk.get,
         peakTaskMemory = meter.peak.get,
         maxTaskMs = if (durs.isEmpty) 0L else durs.last,
-        p50TaskMs = if (durs.isEmpty) 0L else durs(durs.size / 2)))
+        p50TaskMs = if (durs.isEmpty) 0L else durs(durs.size / 2),
+        jobs = meter.jobs.get,
+        resultBytes = meter.result.get))
     } finally spark.sparkContext.removeSparkListener(meter)
   }
 }

@@ -883,7 +883,7 @@ object Joins {
     // geo_predict fix). One 15k-row exchange, shared by the variant
     // build and both name-verify joins; defaultParallelism, never a
     // local constant. A/B: 3.50 s -> 2.48 s isolated min at sf0.1
-    // (OptProbe, 4 reps each arm).
+    // (OPTIMIZATION_r15.md §3, 4 reps each arm).
     joinEditDistOn(Tables(spark, dir, "customer")
       .select(col("c_custkey").as("id"), col("c_name").as("s"))
       .repartition(spark.sparkContext.defaultParallelism))

@@ -662,15 +662,6 @@ object Llm {
     spark.read.parquet(convergedLabels(spark, dir)._1)
       .orderBy(col("doc_id"))
 
-  /** (rounds-to-convergence, directed-edge count) of the memoized
-    * label propagation — ScaleProbe prints these so the
-    * O(log diameter) claim is a measured number beside semdedup's
-    * printed cell bound. */
-  def clusterConvergenceStats(spark: SparkSession, dir: String): (Int, Long) = {
-    val (_, rounds, edges) = convergedLabels(spark, dir)
-    (rounds, edges)
-  }
-
   /** Memo: dir -> (written labels path, rounds, edge count). Values
     * are plain strings/numbers (no session reference), so the weakly
     * held session key stays collectable; eviction deletes the labels
@@ -1637,8 +1628,9 @@ object Llm {
     ivfCellsMemo(spark, dir)(fitIvfCells(spark, dir))
 
   /** (k, largest-cell size) of the memoized cell index — the bound on
-    * semDedup's within-cell quadratic term; ScaleProbe prints it so the
-    * "cells stay ~sqrt(n)" claim is a measured number, not prose. */
+    * semDedup's within-cell quadratic term; the "cells stay ~sqrt(n)"
+    * record is BASELINE.md "Round-11 x100 anchors for the
+    * dedup/curation family" (k 45 -> 448, largest cell 95 -> 553). */
   def ivfCellStats(spark: SparkSession, dir: String): (Int, Long) = {
     val (quant, cells) = ivfCells(spark, dir)
     val largest = cells.groupBy(col("cell")).count()
@@ -1850,8 +1842,9 @@ object Llm {
 
   /** The in-session-fit regime of [[annIvf]] (memoized per (session,
     * dir) via ivfCellsMemo) — the fallback when no committed index
-    * exists, kept addressable so ScaleProbe can price the fit path as
-    * its own trend row instead of mislabeling it "ann ivf". */
+    * exists, kept addressable so AnnIndexSpec can pin snapshot-serve
+    * == fit-serve; its trend row is BASELINE.md "Round-11 ANN trend:
+    * the committed-index dispatch closes the weak row". */
   private[graft] val annIvfFit: Q = (spark, dir) => {
     graft.functions.CosineSimilarity.register(spark)
     val (quant, cells) = ivfCells(spark, dir)
@@ -2462,7 +2455,7 @@ object Llm {
     * vocabulary is 31 words; delta-maintaining it measured 8x slower
     * on overhead alone). Above the bound the explode of every word's
     * pairs is the per-round envelope and the sliver update is the
-    * right shape. Some(b) forces a regime (spec/probe seam).
+    * right shape. Some(b) forces a regime (the LlmSpec seam).
     *
     * The trace is regime-INDEPENDENT by construction — deltas are
     * exact integer arithmetic on the same explode expression — and
@@ -2470,31 +2463,13 @@ object Llm {
     * equality spec gate it. */
   private[graft] def bpeTrainMergesBatched(spark: SparkSession, dir: String,
       target: Int, strictPrefix: Boolean = true,
-      incremental: Option[Boolean] = None): DataFrame =
-    bpeTrainMergesBatchedOn(spark,
-      tokenized(spark, dir)
-        .select(explode(col("t")).as("w"))
-        .filter(col("w") =!= "")
-        .groupBy(col("w")).agg(count(lit(1)).as("n")),
-      target, strictPrefix, incremental)
-
-  /** Below this many distinct words the recount regime wins on fixed
-    * per-job overhead; above it the full pair explode is the envelope
-    * and the incremental sliver update takes over. */
-  private[graft] val bpeIncrementalVocabBound = 100000L
-
-  /** Merges accepted per batched round. */
-  private val bpeMaxPerRound = 48
-
-  /** Frame-input face: `wordCounts` = (w STRING, n LONG) distinct
-    * words with corpus frequencies — the seam the synthetic-vocab
-    * probe and the forced-regime specs use. */
-  private[graft] def bpeTrainMergesBatchedOn(spark: SparkSession,
-      wordCounts: org.apache.spark.sql.DataFrame,
-      target: Int, strictPrefix: Boolean = true,
       incremental: Option[Boolean] = None): DataFrame = {
     import spark.implicits._
-    val vocab = wordCounts
+    // (w, n): distinct words with corpus frequencies
+    val vocab = tokenized(spark, dir)
+      .select(explode(col("t")).as("w"))
+      .filter(col("w") =!= "")
+      .groupBy(col("w")).agg(count(lit(1)).as("n"))
       .withColumn("s", expr("filter(split(w, ''), c -> c <> '')"))
       .select(col("s"), col("n"))
     var v = vocab.localCheckpoint(true)
@@ -2657,6 +2632,14 @@ object Llm {
     merges.toSeq.toDF("rank", "round", "left", "right", "merged", "n")
       .orderBy(col("rank"))
   }
+
+  /** Below this many distinct words the recount regime wins on fixed
+    * per-job overhead; above it the full pair explode is the envelope
+    * and the incremental sliver update takes over. */
+  private[graft] val bpeIncrementalVocabBound = 100000L
+
+  /** Merges accepted per batched round. */
+  private val bpeMaxPerRound = 48
 
   /** Driver-visible face of the batched trainer: a 256-merge vocab —
     * the scale the 1-job-per-merge sequential loop cannot reach — in
@@ -3757,8 +3740,9 @@ object Llm {
     * groups stay ~12 images at any scale — the realistic regime. A
     * fixed modulus would grow every group linearly with the corpus
     * and the pair OUTPUT quadratically, measuring the fixture rather
-    * than the banding (ScaleProbe caught exactly that: ratio 28 at
-    * x10 with m=40, linear after deriving m). */
+    * than the banding (the x10 trend caught exactly that: ratio 28
+    * with m=40, linear after deriving m — BASELINE.md "Round-3
+    * evidence", image phash row). */
   /** Shared front of the perceptual-hash near-dup family: decode →
     * dHash signatures → identical-signature classes → banded
     * class-level candidates verified at hamming ≤ 6. Returns

@@ -32,12 +32,10 @@ object Ml {
     * q_ml_kmeans and q_ml_phase_rows don't each pay a full fit. The
     * soft-valued [[graft.util.TableMemo]] form: a weak session key, and
     * a soft value because the cached DataFrame references its session.
-    * `invalidateFitCache()` drops everything explicitly (e.g. when the
-    * data under `dir` changes). */
+    * `TableMemo.invalidateAll()` drops it with every other memo (e.g.
+    * when the data under `dir` changes). */
   private val fitCache =
     graft.util.TableMemo.soft[org.apache.spark.sql.DataFrame]()
-
-  def invalidateFitCache(): Unit = fitCache.invalidate()
 
   private def clusteredRows(spark: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =

@@ -3,8 +3,10 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Fixture inflater shared by the scale probes and the comparative
-  * anchor: facts are unioned x N with shifted keys (same
+/** Fixture inflater shared by the comparative anchors (TpchAnchor,
+  * SuiteAnchor) and ScaleContractSpec's x10 corpus (BASELINE.md
+  * "Fixture-honest embedding inflation"): facts are unioned x N with
+  * shifted keys (same
   * distributions, N x rows; spans chosen beyond each table's max key
   * so copies never collide), dims are written ONCE (unioning N
   * unshifted dim copies would fan every dim join out x N — a probe
@@ -50,7 +52,7 @@ object Inflate {
 
   /** The embeddings table alone, same perturbed construction as
     * [[apply]]. */
-  private def embeddingsOnly(spark: SparkSession, src: String, dst: String,
+  private[graft] def embeddingsOnly(spark: SparkSession, src: String, dst: String,
       factor: Int): Unit = {
     val base = graft.engine.Tables(spark, src, "embeddings")
     val copies = (0 until factor).map { i =>
@@ -79,7 +81,7 @@ object Inflate {
 
   /** The documents table: the per-copy vocabulary prefix keeps the
     * duplicate RATE constant as the corpus grows. */
-  private def documentsOnly(spark: SparkSession, src: String, dst: String,
+  private[graft] def documentsOnly(spark: SparkSession, src: String, dst: String,
       factor: Int): Unit = {
     val base = graft.engine.Tables(spark, src, "documents")
     val copies = (0 until factor).map { i =>

@@ -103,6 +103,18 @@ class LintSpec extends AnyFunSuite {
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 
+  test("the engine reads only its three environment variables (an " +
+      "env read is a knob production never sets)") {
+    val allowed =
+      Set("SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_CPUS", "SPARK_GRAFT_BENCH_OUT")
+    val named = """(?:sys\.env\S*?\(|getenv\()"(\w+)"""".r
+    val hits = offenders("""sys\.env|getenv""").filterNot { h =>
+      val names = named.findAllMatchIn(h).map(_.group(1)).toSeq
+      names.nonEmpty && names.forall(allowed)
+    }
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
   test("Bench names rows only in its regime tables (a name-keyed " +
       "branch is a hand-kept list that drifts)") {
     val hits = offenders("""== "q_""")

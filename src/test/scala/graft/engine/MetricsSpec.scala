@@ -53,6 +53,20 @@ class MetricsSpec extends SparkTestBase {
     assert(outerM.tasks >= innerM.tasks && innerM.tasks > 0)
   }
 
+  test("a collect is one job, and its result bytes grow with the rows") {
+    val (_, small) = Metrics.measure(spark)(spark.range(10000).collect())
+    val (_, big) = Metrics.measure(spark)(spark.range(100000).collect())
+    assert(small.jobs == 1 && big.jobs == 1, s"${small.pretty} / ${big.pretty}")
+    assert(big.resultBytes > 5 * small.resultBytes,
+      s"result bytes ${small.resultBytes} -> ${big.resultBytes}")
+    // nested windows: the outer one sees the inner one's jobs and bytes
+    val ((_, inner), outer) = Metrics.measure(spark) {
+      Metrics.measure(spark)(spark.range(1000).collect())
+    }
+    assert(inner.jobs == 1 && outer.jobs >= inner.jobs)
+    assert(inner.resultBytes > 0 && outer.resultBytes >= inner.resultBytes)
+  }
+
   test("per-trigger stream metrics: batch duration, input rows, and keyed state surface from a stateful query") {
     import graft.streaming.{Pipelines, StreamMetrics}
     val src = java.nio.file.Files.createTempDirectory("graft_smx_src").toString
