@@ -109,7 +109,7 @@ object Bench {
         s""""shuffle_mb":${m.shuffleWriteBytes / 1048576},""" +
         s""""spill_mb":${(m.memorySpilledBytes + m.diskSpilledBytes) / 1048576},""" +
         s""""gc_ms":${gcMillis() - gc0},""" +
-        s""""tasks":${m.tasks},"spread":${
+        s""""tasks":${m.tasks},"jobs":${m.jobs},"spread":${
           // JSON requires a dot decimal separator regardless of the
           // JVM default locale (the f-interpolator would emit "1,5"
           // under a comma-decimal locale and corrupt the artifact)

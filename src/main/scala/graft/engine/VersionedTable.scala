@@ -350,7 +350,7 @@ object VersionedTable {
       case other => other
     }
     if (enforceSchema) currentVersion(spark, dir).foreach { cur =>
-      val have = spark.read.parquet(s"$dir/v$cur").schema
+      val have = Tables.parquet(spark, s"$dir/v$cur").schema
       val haveT = have.map(x => x.name -> norm(x.dataType)).toMap
       val inT = df.schema.map(x => x.name -> norm(x.dataType)).toMap
       // Shred-declared output columns are pre-authorized: they are
@@ -1014,7 +1014,7 @@ object VersionedTable {
   def read(spark: SparkSession, dir: String, version: Option[Long] = None): DataFrame = {
     val v = version.orElse(currentVersion(spark, dir)).getOrElse(
       throw new IllegalStateException(s"no committed version in $dir"))
-    spark.read.parquet(s"$dir/v$v")
+    Tables.parquet(spark, s"$dir/v$v")
   }
 
   /** Partition-pruned READ of a `partitionBy(partCol)` snapshot: only
@@ -1209,7 +1209,7 @@ object VersionedTable {
     val owned = readProp(f, dir, "_SHRED_PATHS").flatMap(parseShred)
       .map(_._2).toSet
     currentVersion(spark, dir).foreach { cur =>
-      val existing = spark.read.parquet(s"$dir/v$cur").schema
+      val existing = Tables.parquet(spark, s"$dir/v$cur").schema
         .map(_.name).toSet
       val clash = outs.filterNot(owned).filter(existing)
       require(clash.isEmpty,
@@ -1244,7 +1244,7 @@ object VersionedTable {
       .collectFirst { case (`from`, out, `path`, t)
         if t.equalsIgnoreCase(tpe) => out }
       .filter(out => currentVersion(spark, dir).exists(cur =>
-        spark.read.parquet(s"$dir/v$cur").schema.map(_.name).contains(out)))
+        Tables.parquet(spark, s"$dir/v$cur").schema.map(_.name).contains(out)))
   }
 
   /** Parse one `_SHRED_PATHS` element; malformed declarations are
@@ -1275,7 +1275,7 @@ object VersionedTable {
   private def writeManifest(spark: SparkSession, dir: String, v: Long,
       statsCols: Seq[String]): Unit = {
     import org.apache.spark.sql.functions.{input_file_name, max, min}
-    val snap = spark.read.parquet(s"$dir/v$v")
+    val snap = Tables.parquet(spark, s"$dir/v$v")
     val aggs = statsCols.flatMap(c =>
       Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")))
     snap.groupBy(input_file_name().as("file"))
@@ -1348,7 +1348,7 @@ object VersionedTable {
       // exists in the snapshot but not in df — filtering on df.columns
       // silently skipped its first manifest (full-scan reads for v,
       // pruned reads from v+1: an inconsistent first version)
-      val snapCols = spark.read.parquet(s"$dir/v$v").schema
+      val snapCols = Tables.parquet(spark, s"$dir/v$v").schema
         .map(_.name).toSet
       val scols = statsCols.filter(snapCols.contains)
       if (scols.nonEmpty) writeManifest(spark, dir, v, scols)
@@ -1395,7 +1395,7 @@ object VersionedTable {
     }) || f.exists(new Path(mdir))
     if (!hasManifest)
       return (read(spark, dir, Some(v)).filter(exact), -1, -1)
-    val manifest = spark.read.parquet(mdir)
+    val manifest = Tables.parquet(spark, mdir)
     // a range on a column the manifest carries no stats for cannot
     // prune — degrade to the plain filtered scan (the documented
     // contract) instead of an unresolved-column failure inside the

@@ -261,7 +261,7 @@ object Llm {
 
   private def islandSummaryTable(spark: SparkSession, dir: String)
       : DataFrame =
-    spark.read.parquet(islandsCache.getOrBuild(spark, dir) {
+    Tables.parquet(spark, islandsCache.getOrBuild(spark, dir) {
       val p = graft.util.Fs.tempDir("graft_islands")
       substrIslandSummary(spark, dir).write.mode("overwrite").parquet(p)
       p
@@ -659,7 +659,7 @@ object Llm {
     * file read. At cluster scale this temp dir is a real lake path.
     * Oracle: transitive closure via recursive CTE. */
   val dedupClusters: Q = (spark, dir) =>
-    spark.read.parquet(convergedLabels(spark, dir)._1)
+    Tables.parquet(spark, convergedLabels(spark, dir)._1)
       .orderBy(col("doc_id"))
 
   /** Memo: dir -> (written labels path, rounds, edge count). Values
@@ -832,7 +832,7 @@ object Llm {
     * the convergence loop runs once per session, not once per
     * caller). */
   val clusterRep: Q = (spark, dir) => {
-    val clusters = spark.read.parquet(convergedLabels(spark, dir)._1)
+    val clusters = Tables.parquet(spark, convergedLabels(spark, dir)._1)
     val stats = Tables(spark, dir, "documents")
       .select(col("doc_id"), col("n_chars"))
     val w = org.apache.spark.sql.expressions.Window
@@ -2324,81 +2324,37 @@ object Llm {
 
   /** BPE vocabulary induction — TRAINING the tokenizer, not applying
     * one (tokenizeBpe below is the apply face): the byte-pair-merge
-    * loop (Sennrich et al. 2016) as a distributed iteration, run the
-    * way the reference implementation does — over the WEIGHTED VOCAB
-    * (distinct words x frequency), not the raw corpus, so every
-    * round's state is vocab-sized however large the corpus. Each
-    * round: count adjacent symbol pairs weighted by word frequency
-    * (ONE pair-keyed shuffle with map-side partials), pick the global
-    * argmax (a one-row driver decision — the only driver state is the
-    * merge table itself), and apply the merge MAP-ONLY via a
-    * left-fold higher-order aggregate (greedy leftmost,
-    * non-overlapping — the reference semantics; the just-merged
-    * symbol becomes `prev`, so aa+a never double-merges). Symbols
-    * are Unicode CODE POINTS (Spark's split('') segments by code
-    * point) and ties break (count desc, left asc, right asc) in
-    * Spark's binary string order — which IS code-point order (UTF-8
-    * bytes sort like code points), so the contract is
-    * partitioning- and charset-stable. Lineage is truncated every 4
-    * rounds
-    * (the cluster-label-loop pattern). Emits the learned merge table
-    * (rank, left, right, merged, n) — rows-only (an iterative argmax
-    * is not SQL-expressible); the spec verifies against an
-    * independent single-threaded reference implementation. */
+    * loop (Sennrich et al. 2016), run the way the reference
+    * implementation does — over the WEIGHTED VOCAB (distinct words x
+    * frequency), not the raw corpus, so every round's state is
+    * vocab-sized however large the corpus. Each round counts adjacent
+    * symbol pairs weighted by word frequency, picks the argmax and
+    * applies the merge greedy-leftmost and non-overlapping (the
+    * reference semantics; the just-merged symbol becomes `prev`, so
+    * aa+a never double-merges). Symbols are Unicode CODE POINTS
+    * (Spark's split('') segments by code point) and ties break
+    * (count desc, left asc, right asc) in Spark's binary string
+    * order — which IS code-point order (UTF-8 bytes sort like code
+    * points), so the contract is partitioning- and charset-stable.
+    * This is the batched trainer below with one merge per round:
+    * strict mode always accepts its first candidate, which is the
+    * sequential argmax. Emits the learned merge table (rank, left,
+    * right, merged, n) — rows-only (an iterative argmax is not
+    * SQL-expressible); the spec verifies against an independent
+    * single-threaded reference implementation. */
   val bpeTrain: Q = (spark, dir) => bpeTrainMerges(spark, dir, 12)
 
   private[graft] def bpeTrainMerges(spark: SparkSession, dir: String,
-      rounds: Int): DataFrame = {
-    import spark.implicits._
-    val vocab = tokenized(spark, dir)
-      .select(explode(col("t")).as("w"))
-      .filter(col("w") =!= "")
-      .groupBy(col("w")).agg(count(lit(1)).as("n"))
-      .withColumn("s", expr("filter(split(w, ''), c -> c <> '')"))
-      .select(col("s"), col("n"))
-    var v = vocab.localCheckpoint(true)
-    val merges = scala.collection.mutable.ArrayBuffer
-      .empty[(Int, String, String, String, Long)]
-    var round = 0
-    var exhausted = false
-    while (round < rounds && !exhausted) {
-      val pairs = v.filter(size(col("s")) >= 2)
-        .select(col("n"), explode(expr(
-          """transform(
-               arrays_zip(slice(s, 1, size(s) - 1), slice(s, 2, size(s) - 1)),
-               p -> struct(p['0'] AS a, p['1'] AS b))""")).as("p"))
-        .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-        .agg(sum(col("n")).as("cnt"))
-      val top = pairs.orderBy(col("cnt").desc, col("a"), col("b")).limit(1)
-        .as[(String, String, Long)].collect()
-      if (top.isEmpty) exhausted = true
-      else {
-        val (a, b, cnt) = top.head
-        merges += ((round, a, b, a + b, cnt))
-        val mergeRow = Seq((a, b, a + b)).toDF("ma", "mb", "mm")
-        v = v.crossJoin(broadcast(mergeRow))
-          .withColumn("s", expr(
-            """aggregate(s, cast(array() as array<string>),
-                 (out, x) -> IF(size(out) > 0
-                     AND element_at(out, -1) = ma AND x = mb,
-                   concat(slice(out, 1, size(out) - 1), array(mm)),
-                   concat(out, array(x))))"""))
-          .select(col("s"), col("n"))
-        if ((round + 1) % 4 == 0) v = v.localCheckpoint(true)
-        round += 1
-      }
-    }
-    merges.toSeq.toDF("rank", "left", "right", "merged", "n")
-      .orderBy(col("rank"))
-  }
+      rounds: Int): DataFrame =
+    bpeTrainRounds(spark, dir, rounds, strictPrefix = true, None,
+      perRound = 1).drop("round")
 
-  /** Batched BPE training — the real-vocab regime. The sequential
-    * trainer above is one Spark job PER MERGE (fine at 12; a 32k-merge
-    * production vocab would be 32k sequential jobs), so this variant
-    * learns a BATCH of merges per round — the public SentencePiece /
-    * tokenizers batching practice — while staying MERGE-FOR-MERGE
-    * IDENTICAL to the sequential algorithm by construction, not by
-    * luck:
+  /** Batched BPE training — the real-vocab regime. One merge per
+    * round would be one round PER MERGE (a 32k-merge production vocab
+    * would be 32k sequential rounds), so this variant learns a BATCH
+    * of merges per round — the public SentencePiece / tokenizers
+    * batching practice — while staying MERGE-FOR-MERGE IDENTICAL to
+    * the sequential algorithm by construction, not by luck:
     *
     * per round, candidates are taken in global (count desc, left,
     * right) rank order and accepted as the longest PREFIX in which
@@ -2413,9 +2369,7 @@ object Llm {
     * the batch in rank order replays the sequential trace. The first
     * candidate that fails either test ENDS the batch (skipping it
     * would let it outrank a later accepted pair), and the round's
-    * merges apply as one nested higher-order fold — one map stage —
-    * so a round costs one pair-count shuffle + one candidate-filtered
-    * triple count instead of a shuffle per merge.
+    * merges apply as one nested fold.
     *
     * Two modes, because STRICT sequential equality fundamentally caps
     * batch size on natural text: a merge's own product routinely
@@ -2431,49 +2385,173 @@ object Llm {
     * mode exactly sequential on an interference-free planted corpus,
     * and measures merge-set overlap on the real fixture).
     *
-    * Emits (rank, round, left, right, merged, n); LlmSpec proves
-    * strict mode == the independent single-threaded reference
-    * merge-for-merge on real data. */
-  /** Round-8 cost rewrite: pair counts can be DELTA-MAINTAINED (the
-    * standard trainer move) instead of re-exploded from the whole
-    * vocabulary every round. In incremental mode the persistent
-    * (a, b, cnt) table is updated per round by re-counting ONLY the
-    * AFFECTED words — those containing an accepted pair adjacently; a
-    * word with no accepted adjacency is provably untouched by the
-    * batch (the fold rewrites only (ma, mb) adjacents, and an
-    * untouched prefix of merges leaves initial adjacencies equal), so
-    * its pair contributions cannot change. Per round: one map-only
-    * affectedness scan of the vocab + a sliver-sized explode/shuffle,
-    * instead of a corpus-vocab explode + full shuffle. At 32k merges
-    * / ~48 per round that is ~670 sliver updates vs ~670 full
-    * recounts.
-    *
     * REGIME DISPATCH (None = auto, the embedNeardupDispatch pattern):
-    * the delta machinery costs ~3x the Spark jobs per round, so below
-    * [[bpeIncrementalVocabBound]] distinct words the fixed scheduler
-    * floor dominates and the plain recount wins (the sf0.1 fixture
-    * vocabulary is 31 words; delta-maintaining it measured 8x slower
-    * on overhead alone). Above the bound the explode of every word's
-    * pairs is the per-round envelope and the sliver update is the
-    * right shape. Some(b) forces a regime (the LlmSpec seam).
+    * the vocabulary's (symbols, n) rows are collected once, at most
+    * [[bpeIncrementalVocabBound]] + 1 of them. At or below the bound
+    * the rounds run on the driver in plain Scala ([[bpeTrainLocal]]):
+    * a round's work is vocabulary-sized, and as Spark jobs it was all
+    * fixed cost (the sf0.1 fixture vocabulary is 31 words). Above it
+    * the pair counts are delta-maintained in Spark
+    * ([[bpeTrainIncremental]]). Some(b) forces a regime (Some(false)
+    * is the driver regime; the LlmSpec seam).
     *
-    * The trace is regime-INDEPENDENT by construction — deltas are
-    * exact integer arithmetic on the same explode expression — and
-    * the strict-mode merge-for-merge spec plus a forced-incremental
-    * equality spec gate it. */
+    * The trace is regime-INDEPENDENT by construction — both count
+    * with exact integer arithmetic and rank in the same order — and
+    * the strict-mode merge-for-merge spec plus a forced-regime
+    * equality spec gate it. Emits (rank, round, left, right, merged,
+    * n). */
   private[graft] def bpeTrainMergesBatched(spark: SparkSession, dir: String,
       target: Int, strictPrefix: Boolean = true,
-      incremental: Option[Boolean] = None): DataFrame = {
+      incremental: Option[Boolean] = None): DataFrame =
+    bpeTrainRounds(spark, dir, target, strictPrefix, incremental,
+      bpeMaxPerRound)
+
+  private def bpeTrainRounds(spark: SparkSession, dir: String,
+      target: Int, strictPrefix: Boolean, incremental: Option[Boolean],
+      perRound: Int): DataFrame = {
     import spark.implicits._
-    // (w, n): distinct words with corpus frequencies
+    // (s, n): distinct words as code-point symbols, with frequencies
     val vocab = tokenized(spark, dir)
       .select(explode(col("t")).as("w"))
       .filter(col("w") =!= "")
       .groupBy(col("w")).agg(count(lit(1)).as("n"))
       .withColumn("s", expr("filter(split(w, ''), c -> c <> '')"))
       .select(col("s"), col("n"))
+    def rows(df: DataFrame) = df.as[(Seq[String], Long)].collect()
+      .map { case (s, n) => (s.toArray, n) }.toSeq
+    val local = incremental match {
+      case Some(true) => None
+      case Some(false) => Some(rows(vocab))
+      case None => Some(rows(vocab.limit(bpeIncrementalVocabBound.toInt + 1)))
+        .filter(_.size <= bpeIncrementalVocabBound)
+    }
+    val merges = local match {
+      case Some(words) => bpeTrainLocal(words, target, strictPrefix, perRound)
+      case None =>
+        bpeTrainIncremental(spark, vocab, target, strictPrefix, perRound)
+    }
+    merges.toDF("rank", "round", "left", "right", "merged", "n")
+      .orderBy(col("rank"))
+  }
+
+  /** One round's batch from candidates in rank order: strict mode
+    * takes the longest sound prefix (the first failing candidate ends
+    * the batch — skipping it would let it outrank later ones), with
+    * `bound` the interference bound of an accepted pair; practice mode
+    * skips conflicting candidates and keeps scanning. */
+  private def bpeAccept(cand: Seq[(String, String, Long)], want: Int,
+      strictPrefix: Boolean, bound: ((String, String)) => Long)
+      : Seq[(String, String, Long)] = {
+    val used = scala.collection.mutable.Set.empty[String]
+    val accepted = scala.collection.mutable.ArrayBuffer
+      .empty[(String, String, Long)]
+    if (strictPrefix) {
+      var maxI = Long.MinValue
+      // the iterator is lazy: each test sees the batch accepted so far
+      cand.iterator.takeWhile { case (a, b, cnt) =>
+        accepted.isEmpty || (!used(a) && !used(b) && cnt > maxI)
+      }.foreach { case (a, b, cnt) =>
+        accepted += ((a, b, cnt))
+        used += a; used += b
+        maxI = math.max(maxI, bound((a, b)))
+      }
+    } else {
+      cand.foreach { case (a, b, cnt) =>
+        if (accepted.size < want && !used(a) && !used(b)) {
+          accepted += ((a, b, cnt))
+          used += a; used += b
+        }
+      }
+    }
+    accepted.toSeq
+  }
+
+  /** The driver regime: the rounds over a collected vocabulary in
+    * plain Scala, with the distributed regime's rules — pair counts
+    * weighted by `n`, candidates ranked (cnt desc, left, right) in
+    * Spark's binary string order (`UTF8String.compareTo`, code-point
+    * order; `String.compareTo` is UTF-16 code-unit order and differs
+    * on supplementary-plane text), the triple interference bounds
+    * and the same greedy-leftmost fold. */
+  private def bpeTrainLocal(words: Seq[(Array[String], Long)], target: Int,
+      strictPrefix: Boolean, perRound: Int)
+      : Seq[(Int, Int, String, String, String, Long)] = {
+    import org.apache.spark.unsafe.types.UTF8String
+    def add[K](m: scala.collection.mutable.HashMap[K, Long], k: K, n: Long) =
+      m(k) = m.getOrElse(k, 0L) + n
+    var v = words
+    val merges = scala.collection.mutable.ArrayBuffer
+      .empty[(Int, Int, String, String, String, Long)]
+    var round = 0
+    var exhausted = false
+    while (merges.size < target && !exhausted) {
+      val pairs = scala.collection.mutable.HashMap.empty[(String, String), Long]
+      v.foreach { case (s, n) =>
+        for (i <- 0 until s.length - 1) add(pairs, (s(i), s(i + 1)), n)
+      }
+      val want = math.min(perRound, target - merges.size)
+      val pool = if (strictPrefix) want else want * 4
+      val cand = pairs.toSeq
+        .map { case ((a, b), cnt) => ((-cnt, UTF8String.fromString(a),
+          UTF8String.fromString(b)), (a, b, cnt)) }
+        .sortBy(_._1).take(pool).map(_._2)
+      if (cand.isEmpty) exhausted = true
+      else {
+        // weighted counts of each candidate's left (x, a, b) and right
+        // (a, b, z) contexts; the bound is the largest single one
+        lazy val bounds = {
+          val keys = cand.map(c => (c._1, c._2)).toSet
+          val ctx = scala.collection.mutable.HashMap
+            .empty[(Boolean, String, String, String), Long]
+          v.foreach { case (s, n) =>
+            for (i <- 0 until s.length - 2) {
+              val (x, y, z) = (s(i), s(i + 1), s(i + 2))
+              if (keys((y, z))) add(ctx, (true, y, z, x), n)
+              if (keys((x, y))) add(ctx, (false, x, y, z), n)
+            }
+          }
+          ctx.toSeq.groupMapReduce(e => (e._1._2, e._1._3))(_._2)(math.max)
+        }
+        val accepted = bpeAccept(cand, want, strictPrefix,
+          p => bounds.getOrElse(p, 0L))
+        accepted.foreach { case (a, b, cnt) =>
+          merges += ((merges.size, round, a, b, a + b, cnt))
+        }
+        v = v.map { case (s, n) =>
+          accepted.foldLeft(s) { case (cur, (ma, mb, _)) =>
+            val out = scala.collection.mutable.ArrayBuffer.empty[String]
+            cur.foreach { x =>
+              if (out.nonEmpty && out.last == ma && x == mb)
+                out(out.size - 1) = ma + mb
+              else out += x
+            }
+            out.toArray
+          } -> n
+        }
+        round += 1
+      }
+    }
+    merges.toSeq
+  }
+
+  /** The distributed regime above [[bpeIncrementalVocabBound]]: pair
+    * counts are DELTA-MAINTAINED (the standard trainer move) instead
+    * of re-exploded from the whole vocabulary every round. The
+    * persistent (a, b, cnt) table is updated per round by re-counting
+    * ONLY the AFFECTED words — those containing an accepted pair
+    * adjacently; a word with no accepted adjacency is provably
+    * untouched by the batch (the fold rewrites only (ma, mb)
+    * adjacents, and an untouched prefix of merges leaves initial
+    * adjacencies equal), so its pair contributions cannot change. Per
+    * round: one candidate pull, one candidate-filtered triple count
+    * (strict mode), one map-only affectedness scan of the vocab and a
+    * sliver-sized explode/shuffle. At 32k merges / ~48 per round that
+    * is ~670 sliver updates vs ~670 full recounts. */
+  private def bpeTrainIncremental(spark: SparkSession, vocab: DataFrame,
+      target: Int, strictPrefix: Boolean, perRound: Int)
+      : Seq[(Int, Int, String, String, String, Long)] = {
+    import spark.implicits._
     var v = vocab.localCheckpoint(true)
-    val inc = incremental.getOrElse(v.count() > bpeIncrementalVocabBound)
     val pairsOf: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
       frame => frame.filter(size(col("s")) >= 2)
         .select(col("n"), explode(expr(
@@ -2482,29 +2560,27 @@ object Llm {
                p -> struct(p['0'] AS a, p['1'] AS b))""")).as("p"))
         .groupBy(col("p.a").as("a"), col("p.b").as("b"))
         .agg(sum(col("n")).as("cnt"))
-    // incremental regime: the maintained pair-count table, seeded by
-    // ONE full explode, then only sliver deltas touch it
-    var pc: org.apache.spark.sql.DataFrame =
-      if (inc) pairsOf(v).localCheckpoint(true) else null
+    // the maintained pair-count table, seeded by ONE full explode,
+    // then only sliver deltas touch it
+    var pc = pairsOf(v).localCheckpoint(true)
     val merges = scala.collection.mutable.ArrayBuffer
       .empty[(Int, Int, String, String, String, Long)]
     var round = 0
     var exhausted = false
     while (merges.size < target && !exhausted) {
-      val pairs = if (inc) pc else pairsOf(v)
-      val want = math.min(bpeMaxPerRound, target - merges.size)
+      val want = math.min(perRound, target - merges.size)
       // the fast mode skips conflicting candidates, so it scans a
       // wider pool to fill the batch; strict mode stops at the first
       // failure and never looks past `want`
       val pool = if (strictPrefix) want else want * 4
-      val cand = pairs.orderBy(col("cnt").desc, col("a"), col("b"))
-        .limit(pool).as[(String, String, Long)].collect()
+      val cand = pc.orderBy(col("cnt").desc, col("a"), col("b"))
+        .limit(pool).as[(String, String, Long)].collect().toSeq
       if (cand.isEmpty) exhausted = true
       else {
         // interference bounds for the candidate set: max weighted
         // triple count with the candidate pair on either side
         // (strict mode only — the fast mode skips the triple pass)
-        lazy val candDf = cand.toSeq.map(c => (c._1, c._2)).toDF("ca", "cb")
+        lazy val candDf = cand.map(c => (c._1, c._2)).toDF("ca", "cb")
         lazy val triples = v.filter(size(col("s")) >= 3)
           .select(col("n"), explode(expr(
             """transform(
@@ -2529,35 +2605,8 @@ object Llm {
             .as[(String, String, Long)].collect()
             .map(r => (r._1, r._2) -> r._3).toMap
         }
-        val used = scala.collection.mutable.Set.empty[String]
-        var maxI = Long.MinValue
-        val accepted = scala.collection.mutable.ArrayBuffer
-          .empty[(String, String, Long)]
-        if (strictPrefix) {
-          // longest sound prefix: the first failing candidate ends
-          // the batch (skipping it would let it outrank later ones)
-          var stop = false
-          cand.foreach { case (a, b, cnt) =>
-            if (!stop) {
-              val ok = accepted.isEmpty ||
-                (!used(a) && !used(b) && cnt > maxI)
-              if (!ok) stop = true
-              else {
-                accepted += ((a, b, cnt))
-                used += a; used += b
-                maxI = math.max(maxI, bounds.getOrElse((a, b), 0L))
-              }
-            }
-          }
-        } else {
-          // practice mode: skip conflicting candidates, keep scanning
-          cand.foreach { case (a, b, cnt) =>
-            if (accepted.size < want && !used(a) && !used(b)) {
-              accepted += ((a, b, cnt))
-              used += a; used += b
-            }
-          }
-        }
+        val accepted = bpeAccept(cand, want, strictPrefix,
+          p => bounds.getOrElse(p, 0L))
         accepted.foreach { case (a, b, cnt) =>
           merges += ((merges.size, round, a, b, a + b, cnt))
         }
@@ -2567,7 +2616,7 @@ object Llm {
         // else passes through untouched (and contributes no pair
         // delta). sort_array on the leading rank pins application
         // order — collect_list alone has no ordering contract
-        val mseq = accepted.toSeq.zipWithIndex
+        val mseq = accepted.zipWithIndex
           .map { case ((a, b, _), i) => (i, a, b, a + b) }
           .toDF("rk", "ma", "mb", "mm")
           .agg(sort_array(collect_list(
@@ -2579,66 +2628,57 @@ object Llm {
                      AND element_at(out, -1) = mg.ma AND x = mg.mb,
                    concat(slice(out, 1, size(out) - 1), array(mg.mm)),
                    concat(out, array(x)))))"""
-        if (inc) {
-          // partition discipline: filter/union preserve parent
-          // partitioning, so untouched(P) ∪ applied(P) DOUBLES the
-          // partition count every round — exponential task explosion
-          // (a 12-round training hit 16384 tasks per stage before
-          // this narrow coalesce pinned every frame back to the
-          // vocab's own partition count)
-          val nPart = v.rdd.getNumPartitions
-          val flagged = v.crossJoin(broadcast(mseq))
-            .withColumn("hit", expr(
-              """exists(
-                   arrays_zip(slice(s, 1, size(s) - 1), slice(s, 2, size(s) - 1)),
-                   p -> exists(mseq,
-                     mg -> mg.ma = p['0'] AND mg.mb = p['1']))"""))
-          // the SLIVERS are materialized eagerly (they are batch-sized,
-          // and the pc delta below must not drag the whole vocab
-          // lineage through its evaluation); the interpreted merge
-          // folds are confined to the slivers
-          val affected = flagged.filter(col("hit"))
-            .select(col("s"), col("n")).coalesce(nPart).localCheckpoint(true)
-          val untouched = flagged.filter(!col("hit")).select(col("s"), col("n"))
-          val applied = affected.crossJoin(broadcast(mseq))
-            .withColumn("s", expr(foldExpr))
-            .select(col("s"), col("n")).localCheckpoint(true)
-          // sliver delta: subtract the affected words' pre-merge
-          // pairs, add their post-merge pairs; zero rows drop. Exact
-          // integer arithmetic on the same explode — counts equal a
-          // recount.
-          pc = pc
-            .unionByName(pairsOf(affected).withColumn("cnt", -col("cnt")))
-            .unionByName(pairsOf(applied))
-            .groupBy(col("a"), col("b")).agg(sum(col("cnt")).as("cnt"))
-            .filter(col("cnt") > 0)
-            .localCheckpoint(true)
-          // eager vocab checkpoint per round: leaving v lazy stacks
-          // the exists-predicates of successive rounds, and every
-          // later evaluation re-pays them all
-          v = untouched.unionByName(applied).coalesce(nPart)
-            .localCheckpoint(true)
-        } else {
-          // recount regime: one whole-vocab fold, no pair table —
-          // minimal jobs per round, right below the vocab bound
-          v = v.crossJoin(broadcast(mseq))
-            .withColumn("s", expr(foldExpr))
-            .select(col("s"), col("n"))
-            .localCheckpoint(true)
-        }
+        // partition discipline: filter/union preserve parent
+        // partitioning, so untouched(P) ∪ applied(P) DOUBLES the
+        // partition count every round — exponential task explosion
+        // (a 12-round training hit 16384 tasks per stage before
+        // this narrow coalesce pinned every frame back to the
+        // vocab's own partition count)
+        val nPart = v.rdd.getNumPartitions
+        val flagged = v.crossJoin(broadcast(mseq))
+          .withColumn("hit", expr(
+            """exists(
+                 arrays_zip(slice(s, 1, size(s) - 1), slice(s, 2, size(s) - 1)),
+                 p -> exists(mseq,
+                   mg -> mg.ma = p['0'] AND mg.mb = p['1']))"""))
+        // the SLIVERS are materialized eagerly (they are batch-sized,
+        // and the pc delta below must not drag the whole vocab
+        // lineage through its evaluation); the interpreted merge
+        // folds are confined to the slivers
+        val affected = flagged.filter(col("hit"))
+          .select(col("s"), col("n")).coalesce(nPart).localCheckpoint(true)
+        val untouched = flagged.filter(!col("hit")).select(col("s"), col("n"))
+        val applied = affected.crossJoin(broadcast(mseq))
+          .withColumn("s", expr(foldExpr))
+          .select(col("s"), col("n")).localCheckpoint(true)
+        // sliver delta: subtract the affected words' pre-merge
+        // pairs, add their post-merge pairs; zero rows drop. Exact
+        // integer arithmetic on the same explode — counts equal a
+        // recount.
+        pc = pc
+          .unionByName(pairsOf(affected).withColumn("cnt", -col("cnt")))
+          .unionByName(pairsOf(applied))
+          .groupBy(col("a"), col("b")).agg(sum(col("cnt")).as("cnt"))
+          .filter(col("cnt") > 0)
+          .localCheckpoint(true)
+        // eager vocab checkpoint per round: leaving v lazy stacks
+        // the exists-predicates of successive rounds, and every
+        // later evaluation re-pays them all
+        v = untouched.unionByName(applied).coalesce(nPart)
+          .localCheckpoint(true)
         round += 1
       }
     }
-    merges.toSeq.toDF("rank", "round", "left", "right", "merged", "n")
-      .orderBy(col("rank"))
+    merges.toSeq
   }
 
-  /** Below this many distinct words the recount regime wins on fixed
-    * per-job overhead; above it the full pair explode is the envelope
-    * and the incremental sliver update takes over. */
+  /** At or below this many distinct words the rounds run on the
+    * driver; above it the full pair explode is the per-round envelope
+    * and the incremental sliver update in Spark takes over. */
   private[graft] val bpeIncrementalVocabBound = 100000L
 
-  /** Merges accepted per batched round. */
+  /** Merges accepted per batched round (one per round is the
+    * sequential trainer). */
   private val bpeMaxPerRound = 48
 
   /** Driver-visible face of the batched trainer: a 256-merge vocab —

@@ -73,7 +73,7 @@ object Scans {
       .write.mode("overwrite")
       .option("compression", "snappy")
       .parquet(out)
-    spark.read.parquet(out)
+    Tables.parquet(spark, out)
       .groupBy(col("l_returnflag"))
       .agg(
         count(lit(1)).as("cnt"),
@@ -92,7 +92,7 @@ object Scans {
       .write.mode("overwrite")
       .option("compression", "zstd")
       .parquet(out)
-    spark.read.parquet(out)
+    Tables.parquet(spark, out)
       .filter(col("o_orderkey") % 3 === 0)
       .groupBy(col("o_orderpriority"))
       .agg(
@@ -195,7 +195,7 @@ object Scans {
       .write.mode("overwrite")
       .partitionBy("event_date")
       .parquet(out)
-    spark.read.parquet(out)
+    Tables.parquet(spark, out)
       .filter(col("event_date") === lit("2024-01-15").cast("date"))
       .groupBy(col("event_type"))
       .agg(

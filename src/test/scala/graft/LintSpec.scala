@@ -121,4 +121,16 @@ class LintSpec extends AnyFunSuite {
       .filter(_.startsWith("src/main/scala/graft/Bench.scala:"))
     assert(hits.isEmpty, hits.mkString("\n"))
   }
+
+  test("parquet reads in the engine library go through Tables.parquet " +
+      "(a plain read starts a schema-inference job per call)") {
+    val scoped = Seq("engine", "ops", "streaming", "util")
+    val hits = offenders("""\.read\.parquet\(""")
+      .filter(h => scoped.exists(s => h.startsWith(s"src/main/scala/graft/$s/")))
+      // the helper's own fallback, for a path with no data file
+      .filterNot(h => h.startsWith("src/main/scala/graft/engine/Tables.scala:") &&
+        h.endsWith("spark.read.parquet(path)"))
+      .filterNot(_.contains("mergeSchema"))
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
 }

@@ -740,6 +740,31 @@ class LlmSpec extends SparkTestBase {
     }
   }
 
+  test("both BPE regimes break count ties in code-point order on mixed-plane text") {
+    // U+FF48 sorts BELOW U+1F600 by code point (Spark's binary order)
+    // but ABOVE it by UTF-16 code unit (String.compareTo): a tied count
+    // between the two pairs must merge the fullwidth pair first
+    val (h, e) = ("\uFF48", new String(Character.toChars(0x1F600)))
+    val dir = java.nio.file.Files.createTempDirectory("graft_bpe_planes").toString
+    Seq((0L, s"$e$e $h$h"), (1L, s"$h$h $e$e $h$e"))
+      .toDF("doc_id", "text")
+      .withColumn("lang", lit("xx")).withColumn("source", lit("s0"))
+      .withColumn("n_chars", length($"text").cast("long"))
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val words = fixtureWords(dir)
+    for (strict <- Seq(true, false)) {
+      val runs = Seq(Some(false), Some(true)).map(inc =>
+        Llm.bpeTrainMergesBatched(spark, dir, target = 3,
+            strictPrefix = strict, incremental = inc)
+          .select($"left", $"right", $"merged", $"n")
+          .as[(String, String, String, Long)].collect().toSeq)
+      assert(runs(0) == runs(1), s"strict=$strict: regimes diverge: $runs")
+      assert(runs(0).head._3 == h + h, s"strict=$strict: ${runs(0)}")
+      if (strict) assert(runs(0) == referenceBpe(words, rounds = 3))
+    }
+    graft.util.Fs.deleteRecursively(dir)
+  }
+
   test("fast-batched BPE: 256 merges within 20 rounds, exact on an interference-free corpus") {
     // 256 planted 2-symbol words over DISJOINT alphabets with strictly
     // decreasing counts: every word fully merges in one step, no merge
