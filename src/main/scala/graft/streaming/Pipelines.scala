@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
@@ -16,7 +16,8 @@ import org.apache.spark.sql.types._
   * (`services/silver_layer/process_silver.py:18-26,52-130`) — becomes
   * two declarative streaming jobs:
   *
-  *  - ingest: text/Kafka source -> positional JSON parse -> normalize ->
+  *  - ingest: text/Kafka source -> positional JSON parse (one
+  *    `from_json` per line) -> normalize ->
   *    watermarked dedup -> parquet sink, micro-batched by trigger
   *    (`Trigger.ProcessingTime` ≡ FLUSH_INTERVAL; tests use
   *    `Trigger.AvailableNow`);
@@ -59,16 +60,35 @@ object Pipelines {
     (16, "position_source", IntegerType),
     (17, "category", IntegerType))
 
+  /** One state-vector line parsed once into its positional elements,
+    * each as text: JSON null reads NULL, a string its value, any other
+    * element its JSON text (`1.7e9` reads "1.7E9", as in
+    * `get_json_object`). A line that is not a JSON array reads NULL.
+    * The two options make Spark's JSON reader accept and reject what
+    * the `get_json_object`/`json_array_length` parser does: raw
+    * control characters inside strings are accepted, unquoted
+    * `NaN`/`Infinity` rejected. */
+  private def stateArray(jsonCol: String): Column =
+    from_json(col(jsonCol), ArrayType(StringType), Map(
+      "allowUnquotedControlChars" -> "true",
+      "allowNonNumericNumbers" -> "false"))
+
+  /** Element `idx` of the bound array as text; NULL past the end (`get`
+    * never fails on the index, ANSI or not) and for JSON null or the
+    * string "null". */
+  private def element(arr: Column, idx: Int): Column =
+    nullif(get(arr, lit(idx)), lit("null"))
+
   /** Positional JSON array line -> typed columns. Works identically on
-    * batch and streaming frames; heterogeneous array elements are
-    * extracted as JSON scalars then cast (all codegen'd). */
+    * batch and streaming frames. Each line is parsed once
+    * (`stateArray`), bound as a column so the optimizer keeps one
+    * parse, and every field is cast from its element's text. */
   def parseStates(raw: DataFrame, jsonCol: String = "value"): DataFrame = {
-    val cols = stateVectorFields.map { case (idx, name, dt) =>
-      // get_json_object yields the literal string "null" for JSON null
-      nullif(get_json_object(col(jsonCol), s"$$[$idx]"), lit("null"))
-        .cast(dt).as(name)
-    }
-    raw.select(cols: _*)
+    val sv = col("__sv")
+    raw.select(stateArray(jsonCol).as("__sv"))
+      .select(stateVectorFields.map { case (idx, name, dt) =>
+        element(sv, idx).cast(dt).as(name)
+      }: _*)
   }
 
   /** Corrupt-input classification (the engine's analog of the
@@ -87,25 +107,29 @@ object Pipelines {
     *    (e.g. a string where longitude belongs). Without this check the
     *    bad value would silently become NULL inside an otherwise-good
     *    row.
-    * All checks are pure codegen'd expressions (json_array_length +
-    * per-field try-cast shape) — no UDF, no driver involvement. */
+    * The line is parsed once (`stateArray`), bound as a column and
+    * dropped afterwards: inline, the parse would run again in each
+    * `when` branch and `||` arm that evaluates it conditionally. No UDF,
+    * no driver involvement. */
   def classifyStates(raw: DataFrame, jsonCol: String = "value"): DataFrame = {
-    val arrLen = json_array_length(col(jsonCol))
+    val sv = col("__sv")
     val typeBad = stateVectorFields
       .filter { case (_, _, dt) => dt != StringType }
       .map { case (idx, _, dt) =>
-        val rawV = nullif(get_json_object(col(jsonCol), s"$$[$idx]"), lit("null"))
+        val rawV = element(sv, idx)
         // try_cast, not cast: under ANSI mode a malformed value must
         // CLASSIFY the row, not abort the stream
         rawV.isNotNull && rawV.try_cast(dt).isNull
       }
       .reduce(_ || _)
-    raw.withColumn(
-      "_reason",
-      when(col(jsonCol).isNull || arrLen.isNull, "not_json_array")
-        .when(arrLen < 17, "short_array")
-        .when(typeBad, "type_mismatch")
-        .otherwise(lit(null).cast(StringType)))
+    raw.withColumn("__sv", stateArray(jsonCol))
+      .withColumn(
+        "_reason",
+        when(col(jsonCol).isNull || sv.isNull, "not_json_array")
+          .when(size(sv) < 17, "short_array")
+          .when(typeBad, "type_mismatch")
+          .otherwise(lit(null).cast(StringType)))
+      .drop("__sv")
   }
 
   /** §3.1 ingest with a quarantine lane: good lines are parsed,

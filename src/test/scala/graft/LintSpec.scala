@@ -133,4 +133,12 @@ class LintSpec extends AnyFunSuite {
       .filterNot(_.contains("mergeSchema"))
     assert(hits.isEmpty, hits.mkString("\n"))
   }
+
+  test("streaming reads positional JSON fields from one parse (each " +
+      "get_json_object call parses the whole line again)") {
+    // a positional path: "$[i]" or '$[i]', or $$[ in an interpolated string
+    val hits = offenders("""get_json_object\(.*(\$\$\[|["']\$\[)""")
+      .filter(_.startsWith("src/main/scala/graft/streaming/"))
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
 }
